@@ -2,6 +2,7 @@ package graft
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.graft.ListenerBridge
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 
 object Bench {
@@ -43,10 +44,17 @@ object Bench {
     // amortizes once per corpus. Diagnostic only — the headline total and
     // the round-over-round comparison stay on the warm min-of-3 (cold
     // also carries codegen-order and first-touch page-cache noise).
+    // Janino compiles per query, from Spark's own counter (one count per
+    // generated class compiled, on any thread): a query that keeps
+    // compiling in the warm passes is missing the generated-code cache.
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val coldCompiles = collection.mutable.Map[String, Long]()
     val cold = selected.map { case (name, fn) =>
+      val c0 = compiles
       val t0 = System.nanoTime()
       val ok = try { fn(spark, sfDir).count(); true }
                catch { case _: Throwable => false }
+      coldCompiles(name) = compiles - c0
       name -> (if (ok)
         math.round((System.nanoTime() - t0) / 1e9 * 1000).toDouble / 1000
       else -1.0)
@@ -102,13 +110,17 @@ object Bench {
     val shuffleBytes = collection.mutable.Map[String, Long]()
     val cpuSecs = collection.mutable.Map[String, Vector[Double]]()
     val runSecs = collection.mutable.Map[String, Vector[Double]]()
+    val warmCompiles = collection.mutable.Map[String, Long]()
     for (pass <- 1 to passes; (name, fn) <- selected) {
       ListenerBridge.drain(spark.sparkContext)
       inFlight.set(0); cpuNanos.set(0); runMillis.set(0)
+      val c0 = compiles
       val t0 = System.nanoTime()
       val ok = try { fn(spark, sfDir).count(); true }
                catch { case _: Throwable => false }
       val dt = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
+      warmCompiles(name) =
+        math.min(warmCompiles.getOrElse(name, Long.MaxValue), compiles - c0)
       times(name) = times.getOrElse(name, Vector.empty) :+ dt
       ListenerBridge.drain(spark.sparkContext)
       if (pass == 1) shuffleBytes(name) = inFlight.get()
@@ -156,6 +168,8 @@ object Bench {
     // 10 queries, comfortably under the tail window — and write the
     // complete per-query map to BENCH_DETAIL.json next to the build.
     val sortedBytes = selected.map { case (n, _) => n -> shuffleBytes.getOrElse(n, 0L) }
+    def bySelected(m: collection.Map[String, Long]) =
+      selected.map { case (n, _) => n -> m(n) }
     val detail = java.nio.file.Paths.get("BENCH_DETAIL.json")
     java.nio.file.Files.write(detail,
       (s"""{"metric":"total","value":$total,"unit":"sec",""" +
@@ -163,6 +177,8 @@ object Bench {
        s""""cold":${asJson(cold)},""" +
        s""""shuffle_bytes":${asJsonL(sortedBytes)},""" +
        s""""cpu":${asJson(cpu)},"task_run":${asJson(taskRun)},""" +
+       s""""codegen_compiles":{"cold":${asJsonL(bySelected(coldCompiles))},""" +
+       s""""warm_min":${asJsonL(bySelected(warmCompiles))}},""" +
        s""""passes":$passes,"interleaved":true,""" +
        s""""sf":"$sfDir"}""" + "\n")
         .getBytes("UTF-8"))

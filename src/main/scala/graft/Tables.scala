@@ -233,16 +233,6 @@ object Tables {
     }
   }
 
-  /** Mirrors raw_gdp_growth / raw_unemployment (database.py:31-55). */
-  val rawIndicatorSchema: StructType = StructType(Seq(
-    StructField("country_iso3", StringType),
-    StructField("country_name", StringType),
-    StructField("year", IntegerType),
-    StructField("value", DoubleType),
-    StructField("indicator_id", StringType),
-    StructField("indicator_name", StringType),
-    StructField("fetched_at", TimestampType)))
-
   /** Mirrors the World Bank API record shape (api_fetcher.py:125-130,
     * database.py:96-102): nested country/indicator structs, year-as-string. */
   val rawApiRecordSchema: StructType = StructType(Seq(
@@ -253,16 +243,4 @@ object Tables {
       StructField("id", StringType), StructField("value", StringType)))),
     StructField("date", StringType),
     StructField("value", DoubleType)))
-
-  /** Mirrors cleaned_data (transformer.py:37-51). */
-  val cleanedSchema: StructType = StructType(Seq(
-    StructField("country_iso3", StringType),
-    StructField("country_name", StringType),
-    StructField("year", IntegerType),
-    StructField("gdp_growth", DoubleType),
-    StructField("unemployment", DoubleType),
-    StructField("gdp_growth_lag1", DoubleType),
-    StructField("gdp_growth_roll5", DoubleType),
-    StructField("unemp_roll5", DoubleType),
-    StructField("cleaned_at", TimestampType)))
 }

@@ -58,7 +58,9 @@ object EventStream {
     * JVM exit. Shared by readEvents / readDocuments / readOrders /
     * readEmbeddings — one staging rule, four schemas. */
   private def stagedStreamDir(dir: String, fileName: String): String = {
-    val p = java.nio.file.Paths.get(dir, fileName)
+    // absolute: a relative link target resolves against the temp dir the
+    // link lives in, so it would dangle and the stream would read 0 rows
+    val p = java.nio.file.Paths.get(dir, fileName).toAbsolutePath.normalize
     if (java.nio.file.Files.isRegularFile(p)) {
       stagedDirs.computeIfAbsent(p.toString, { _ =>
         val d = java.nio.file.Files.createTempDirectory("graft_stream")

@@ -578,4 +578,19 @@ class StreamingSpec extends AnyFunSuite {
         s"state rows $keys != $users distinct users — per-event state?")
     } finally q.stop()
   }
+
+  test("streaming_totals on a fixture dir given relative to the working " +
+       "dir returns the rows of the absolute dir") {
+    // the staged stream dir symlinks the source file: a relative link
+    // target would resolve against the temp dir and read 0 rows
+    val abs = java.nio.file.Paths.get("/root/testdata/sf0.001")
+    assert(java.nio.file.Files.isDirectory(abs), s"fixture $abs is missing")
+    val rel = java.nio.file.Paths.get("").toAbsolutePath.relativize(abs)
+    assert(!rel.isAbsolute)
+    def totals(dir: String) = graft.streaming.StreamingBatch
+      .streamingTotals(spark, dir).collect().toSeq
+    val want = totals(abs.toString)
+    assert(want.nonEmpty)
+    assert(totals(rel.toString) === want)
+  }
 }

@@ -11,10 +11,14 @@ object TestSpark {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config(Tables.NanosAsLongKey, "true")
+      // mirrors GraftSession: the aggregate threshold, the generated-code
+      // cache size and artifact isolation off (extensions omitted: the
+      // shared test session registers functions explicitly where needed)
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-              "1000000") // mirrors GraftSession (extensions omitted: the
-                         // shared test session registers functions
-                         // explicitly where needed)
+              "1000000")
+      .config("spark.sql.codegen.cache.maxEntries",
+              GraftSession.CodegenCacheEntries.toString)
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
