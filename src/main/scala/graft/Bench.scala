@@ -36,7 +36,7 @@ object Bench {
       .toSeq.sortBy(_._1)
     // TIMED warmup = the COLD column: first executions pay the one-time
     // costs the steady-state passes below never see — artifact staging
-    // (materializeOnce pair/label layers), model training (modelOnce),
+    // (Staged.layer pair/label layers), model training (Staged.value),
     // plus JVM/codegen/scan init. Recording it per query makes
     // artifact-consumer regressions self-diagnosing: a WARM regression
     // with cold unchanged is plan drift in the steady-state read; a COLD

@@ -222,28 +222,20 @@ object Audit {
   private[graft] def psiIsBase: Column =
     coalesce(col("o_orderdate") < psiCut, lit(false))
 
-  /** Memoized edge values behind psiEdges — the Similarity.modelOnce
-    * doctrine applied to the audit's one model parameter: the nine
-    * decile doubles are learned from the base slice ONCE per (dir,
-    * orders fingerprint) and every later invocation builds its 1-row
+  /** Base-slice decile edges — the 1-row model parameter the drift audit
+    * publishes offline and every scoring pass broadcasts. The nine
+    * decile doubles are learned from the base slice ONCE per orders
+    * content ([[graft.Staged]]) and every later invocation builds its 1-row
     * relation from the cached literals. Before this, EVERY psi_drift /
     * streaming_psi_drift invocation re-ran the count + distributedRank
     * + flanking-row collect (eagerly, at DataFrame-construction time —
     * and the streaming twin built the relation TWICE per call: once for
     * publish, once in psiStreamReport), several driver-visible jobs per
     * bench pass that a deployment's offline-learned artifact never
-    * pays. BOUNDEDNESS: one ≤9-double entry per fixture dir the JVM
-    * touches (driver sf dirs, spec temp dirs, probe dirs — a fixed
-    * handful, never data-proportional). None = empty base slice. */
-  private val psiEdgeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Option[Seq[Double]]]()
-
-  /** Base-slice decile edges — the 1-row model parameter the drift audit
-    * publishes offline and every scoring pass broadcasts. */
+    * pays. NULL edges = empty base slice. */
   private[graft] def psiEdges(spark: SparkSession, dir: String): DataFrame = {
     val nullEdge = lit(null).cast("double")
-    Tables.memoized(psiEdgeCache,
-      s"$dir@${Tables.fp(dir, "orders")}")(
+    graft.Staged.value(graft.Staged.key("psi_edge_values", dir, "orders"))(
       psiEdgeValues(spark, dir)) match {
       case Some(edges) =>
         spark.range(1)

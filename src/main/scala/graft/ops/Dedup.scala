@@ -91,20 +91,20 @@ object Dedup {
     * PipelineSpec pins staged == recomputed. */
   private[graft] def stagedSignatures(spark: SparkSession,
       dir: String): DataFrame =
-    graft.Pipeline.materializeOnce(spark,
-      s"minhash_sigs@$dir@${Tables.fp(dir, "documents")}")(
+    graft.Staged.layer(spark,
+      graft.Staged.key("minhash_sigs", dir, "documents"))(
       signatures(spark, dir))
 
   private[graft] def stagedPairs(spark: SparkSession,
       dir: String): DataFrame =
-    graft.Pipeline.materializeOnce(spark,
-      s"minhash_pairs@$dir@${Tables.fp(dir, "documents")}")(
+    graft.Staged.layer(spark,
+      graft.Staged.key("minhash_pairs", dir, "documents"))(
       minhashPairs(spark, dir))
 
   /** Staged cluster labels — the query-map form of dedupClusters. */
   def stagedLabels(spark: SparkSession, dir: String): DataFrame =
-    graft.Pipeline.materializeOnce(spark,
-      s"dedup_labels@$dir@${Tables.fp(dir, "documents")}")(
+    graft.Staged.layer(spark,
+      graft.Staged.key("dedup_labels", dir, "documents"))(
       dedupClusters(spark, dir))
 
   /** X2b MinHash LSH candidate pairs: 2 bands × 2 rows — docs agreeing on
@@ -240,8 +240,8 @@ object Dedup {
     * table the dedup jobs share, not a CTE each one re-derives. */
   private[graft] def stagedEmbedPairs(spark: SparkSession, dir: String,
       threshold: Double): DataFrame =
-    graft.Pipeline.materializeOnce(spark,
-      s"embed_pairs@$dir@$threshold@${Tables.fp(dir, "embeddings")}")(
+    graft.Staged.layer(spark,
+      graft.Staged.key("embed_pairs", dir, "embeddings", threshold))(
       embedPairs(spark, dir, threshold))
 
   /** Sign-LSH blocked cosine pairs at a threshold — shared by
@@ -946,7 +946,7 @@ object Dedup {
     * that Θ(clusters·sources) relation (fan-out ≤ |sources|² per
     * cluster) into a Θ(|sources|²) final matrix. Nothing row-level
     * crosses the second shuffle, and the lineage is staged once per
-    * session (materializeOnce), shared with every other label consumer. */
+    * session (Staged.layer), shared with every other label consumer. */
   def dedupCrossSource(spark: SparkSession, dir: String): DataFrame = {
     val cs = stagedLabels(spark, dir)
       .select(col("doc_id"), col("cluster_id"))

@@ -313,7 +313,7 @@ object Events {
   def zscoreAnomalies(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.t(spark, dir, "events")
       .select(col("event_id"), col("event_type"), col("value"), col("ts"))
-    zscoreChunked(e, Some(s"$dir@${Tables.fp(dir, "events")}"))
+    zscoreChunked(e, Some(graft.Staged.key("zscore_stats", dir, "events")))
       .getOrElse(zscorePlain(e))
   }
 
@@ -357,24 +357,19 @@ object Events {
     * labeler); if any bucket is under-full the operator falls back to the
     * plain window (production would widen the chunk instead: size chunks
     * so min-rows-per-chunk ≥ frame). Returns None on fallback. */
-  private val zscoreStatsCache = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[org.apache.spark.sql.Row]]()
-
   private[graft] def zscoreChunked(e: DataFrame,
-      memoKey: Option[String] = None): Option[DataFrame] = {
+      memoKey: Option[graft.Staged.Key] = None): Option[DataFrame] = {
     val frame = 100
     val spark = e.sparkSession
     val b = e.withColumn("bucket", date_trunc("DAY", col("ts")))
     // |types × days| rows — the chunk-occupancy statistics behind the
     // losslessness gate. Collected (they are broadcast to every carry-
     // join task anyway, so the driver holds them either way) and, for
-    // the dir-backed operator, memoized per (dir, events fingerprint)
-    // like every learned banding parameter: the gate verdict and the
-    // carry map are input invariants, but every invocation re-ran the
-    // full events aggregate to re-derive them. Spec callers pass no key
-    // and keep the uncached compute. BOUNDEDNESS: Θ(types × days) small
-    // rows per fixture dir — the same bound the broadcast already
-    // imposes.
+    // the dir-backed operator, computed once per events content like
+    // every learned banding parameter: the gate verdict and the carry
+    // map are input invariants, but every invocation re-ran the full
+    // events aggregate to re-derive them. Spec callers pass no key and
+    // keep the uncached compute.
     def statRows(): Seq[org.apache.spark.sql.Row] = {
       val stats = b.groupBy(col("event_type"), col("bucket"))
         .agg(count(lit(1)).as("cnt"))
@@ -383,7 +378,7 @@ object Events {
         .collect().toSeq
     }
     val rows = memoKey match {
-      case Some(k) => graft.Tables.memoized(zscoreStatsCache, k)(statRows())
+      case Some(k) => graft.Staged.value(k)(statRows())
       case None => statRows()
     }
     val underFull = rows.exists(r => !r.isNullAt(3) && r.getLong(2) < frame)
@@ -515,9 +510,6 @@ object Events {
     * reducer; at 100 TB the drop-in swap is approx_percentile (a
     * mergeable t-digest-style sketch, map-side combinable) — exact stays
     * here because the oracle can check it bit-for-bit. */
-  private val madModelCache = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[(String, Double, Double)]]()
-
   def madOutliers(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.t(spark, dir, "events")
       .select(col("event_id"), col("event_type"), col("value"))
@@ -525,14 +517,13 @@ object Events {
     // dataflow (Relational.groupedQuantiles) — percentile() held each
     // type's Θ(distinct values) buffer whole in one task
     // the per-type (median, MAD) pairs are a |types|-row MODEL PARAMETER
-    // (the psiEdges doctrine), memoized per (dir, events fingerprint):
+    // (the psiEdges doctrine), computed once per events content:
     // the r13 form collected the medians once per call but left the MAD
     // stage lazy, so every invocation still ran the deviations quantile
     // pass (a full events pass) to re-learn the same |types| doubles —
     // the scoring query below needs only the published literals.
-    // BOUNDEDNESS: |event types| (type, mad, med) rows per fixture dir.
-    val madRows = Tables.memoized(madModelCache,
-      s"$dir@${Tables.fp(dir, "events")}") {
+    val madRows = graft.Staged.value(
+      graft.Staged.key("mad_model", dir, "events")) {
         val nEvents = Tables.footerCount(spark, dir, "events") // footer-only
         import spark.implicits._
         val med = Relational.exactQuantiles(e, "event_type", "value",

@@ -43,41 +43,20 @@ object Ingest {
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
       "countryiso3code STRING, country STRUCT<id: STRING>, date STRING, value DOUBLE")
     val base = Tables.spread(Tables.events(spark, dir))
-    // A/B dial (round-15, guide §4 expression cost): 'tuple' extracts via
-    // json_tuple (one streaming parse for the top-level fields, one
-    // get_json_object for the nested id — no struct materialization);
-    // default is the from_json struct path. Both compute the identical
-    // relation; the dial exists to measure, and the default is the
-    // MEASURED winner: at sf0.1/32c, struct 1.97/1.60 s vs tuple
-    // 2.02/1.94 s (two interleaved min-of-3 rounds each) — json_tuple's
-    // second parse for the nested country.id costs more than the
-    // single-parse struct materialization it avoids. NEGATIVE RESULT for
-    // the tuple variant, kept as a dial so the next decade re-measures
-    // instead of re-implementing.
-    val variant = sys.props.getOrElse("graft.ingest.jsonVariant", "struct")
-    val parsed =
-      if (variant == "tuple")
-        base.select(col("event_id"), rec.as("rec"))
-          .select(col("event_id"),
-            expr("json_tuple(rec, 'countryiso3code', 'date', 'value')")
-              .as(Seq("c3", "d", "v")),
-            expr("get_json_object(rec, '$.country.id')").as("cid"))
-          .select(
-            col("event_id"),
-            coalesce(expr("nullif(c3, '')"), col("cid")).as("iso3"),
-            expr("try_cast(d AS BIGINT)").as("year"),
-            expr("cast(v AS DOUBLE)").as("value"))
-      else
-        base.select(col("event_id"), from_json(rec, schema).as("r"))
-          .select(
-            col("event_id"),
-            // P2: Python `rec.get("countryiso3code") or country["id"]`
-            // treats "" as falsy → nullif-then-coalesce (database.py:97)
-            coalesce(expr("nullif(r.countryiso3code, '')"),
-              col("r.country.id")).as("iso3"),
-            expr("try_cast(r.date AS BIGINT)").as("year"), // F3
-            col("r.value").as("value"))
-    parsed
+    // from_json struct extraction. The json_tuple alternative (one
+    // streaming parse for the top-level fields plus a get_json_object
+    // for the nested id) lost its A/B at sf0.1/32c — struct 1.97/1.60 s
+    // vs tuple 2.02/1.94 s, two interleaved min-of-3 rounds each — and
+    // diverges from from_json on quoted numbers, so it is not kept.
+    base.select(col("event_id"), from_json(rec, schema).as("r"))
+      .select(
+        col("event_id"),
+        // P2: Python `rec.get("countryiso3code") or country["id"]`
+        // treats "" as falsy → nullif-then-coalesce (database.py:97)
+        coalesce(expr("nullif(r.countryiso3code, '')"),
+          col("r.country.id")).as("iso3"),
+        expr("try_cast(r.date AS BIGINT)").as("year"), // F3
+        col("r.value").as("value"))
       .filter(length(col("iso3")) > 0 && col("year").isNotNull) // F2+F3 reject
       .orderBy(col("event_id"))
   }

@@ -354,15 +354,15 @@ object Multimodal {
     * 100 TB media-dedup deploy would publish. */
   private[graft] def stagedPerceptualPairs(spark: SparkSession,
       dir: String): DataFrame =
-    graft.Pipeline.materializeOnce(spark,
-      s"mm_pairs@$dir@${Tables.fp(dir, "documents")}")(
+    graft.Staged.layer(spark,
+      graft.Staged.key("mm_pairs", dir, "documents"))(
       perceptualPairs(spark, dir))
 
   // private[graft]: PlanSpec audits the GENERATION plan (the staged
   // read-back the query surface serves is just a parquet scan)
   private[graft] def perceptualPairs(spark: SparkSession,
       dir: String): DataFrame = {
-    // memoized footer count, no data scan
+    // once-computed footer count, no data scan
     val bits = perceptualBits(Tables.footerCount(spark, dir, "documents"))
     val sig = perceptualSigs(
       Tables.spread(Tables.t(spark, dir, "documents")), bits)

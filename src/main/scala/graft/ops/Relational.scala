@@ -1061,7 +1061,7 @@ object Relational {
 
   /** exactQuantiles over a BASE-TABLE projection, with the big-mode
     * ranked histogram STAGED per (dir, table, group, value) — one
-    * materializeOnce artifact serves every caller's percentile set. The
+    * Staged.layer artifact serves every caller's percentile set. The
     * round-11 100× probe priced the alternative: percentiles /
     * winsorize / approx_sketch each re-ran the full histogram + rank
     * dataflow over the same (l_returnflag, l_extendedprice) projection
@@ -1075,15 +1075,14 @@ object Relational {
       ps: Seq[(String, Double)]): DataFrame = {
     val base = Tables.t(spark, dir, table)
       .select(col(groupCol), col(valueCol))
-    // memoized footer count — the round-12 creep: re-counting per call
+    // once-computed footer count — the round-12 creep: re-counting per call
     // (percentiles calls twice: price + qty) re-paid a job per invocation
     val n = Tables.footerCount(spark, dir, table)
     if (n < QuantileDataflowMinRows)
       exactQuantiles(base, groupCol, valueCol, ps, n)
     else {
-      val hist = graft.Pipeline.materializeOnce(spark,
-        s"qhist@$dir@$table@$groupCol@$valueCol@" +
-          Tables.fp(dir, table))(
+      val hist = graft.Staged.layer(spark,
+        graft.Staged.key("qhist", dir, table, groupCol, valueCol))(
         rankedGroupHist(base, groupCol, valueCol))
       quantilesFromHist(hist, groupCol, valueCol, ps)
     }
@@ -1181,9 +1180,6 @@ object Relational {
       .cast("long")
   }
 
-  private val rfmBoundsCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Long, Map[String, Array[Double]])]()
-
   /** RFM customer segmentation — the classic marketing rollup: per
     * customer recency (days since last order, anchored at the corpus
     * max order date so the result is reproducible), frequency, monetary
@@ -1219,13 +1215,13 @@ object Relational {
     // quadratic-lineage trap). All three boundary sets come from ONE
     // multi-column approxQuantile job rather than one action per
     // measure (3 jobs → 1; measured ~0.9s of the 4.2→2.1s win) — and
-    // the (count, bounds) pair is memoized per (dir, orders fp) like
+    // the (count, bounds) pair is computed once per orders content like
     // every other learned banding parameter (psiEdges doctrine): n is
     // an exact invariant of the input, the bounds only steer
     // distributedRank's range partitioning (exactness does not depend
-    // on them). BOUNDEDNESS: 3×31 doubles + one long per fixture dir.
-    val (n, boundsOf) = Tables.memoized(rfmBoundsCache,
-      s"$dir@${Tables.fp(dir, "orders")}") {
+    // on them).
+    val (n, boundsOf) = graft.Staged.value(
+      graft.Staged.key("rfm_bounds", dir, "orders")) {
         val parts = 32
         val probs = (1 until parts).map(_.toDouble / parts).toArray
         val allBounds = base.stat.approxQuantile(

@@ -623,71 +623,9 @@ object Similarity {
   private def pqNprobe(n: Long): Int =
     probeDial("graft.pq.nprobe", pqNprobeAdaptive(n))
 
-  /** Learned-model cache: trained codebooks (PQ, IVF, k-means) are
-    * MODEL PARAMETERS — KBs of driver-side state derived by a
-    * deterministic bounded job per fixture dir. Before this cache each
-    * CONSUMING QUERY re-ran the learn pass (seed draw + corpus
-    * aggregate) inside its own job tree — at 100 TB the learn is the
-    * expensive offline stage and must run once, with every search/encode
-    * query reading the trained model (the offline-writes/online-reads
-    * shape the streaming twins and materializeOnce already pin for
-    * relations). Keys embed the dir; fixture dirs are immutable, so no
-    * staleness window. getOrElseUpdate under the map's monitor is
-    * reentrant per thread (nested learns — PQ's learn reading the IVF
-    * model — can't self-deadlock). */
-  private val modelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
-  // BOUNDEDNESS: one entry per (model kind × fixture dir × content
-  // fingerprint) ever seen by the JVM — a handful of KB-sized models per
-  // dataset, never data-proportional. Lock objects are bytes; models are
-  // the same codebooks a deployed index would pin in memory for its
-  // whole lifetime, so no eviction is needed in any supported shape.
-  private val modelLocks =
-    scala.collection.mutable.Map.empty[String, Object]
-  /** Per-key locks (the materializeOnce stageLocks pattern): training
-    * model A must not serialize unrelated model B's learn job behind one
-    * global monitor, and nested learns (PQ reading the IVF model) stay
-    * safe because Java monitors are reentrant per thread and nested keys
-    * lock in lineage order. A failed compute registers nothing. */
-  private def modelOnce[T <: AnyRef](key: String)(compute: => T): T = {
-    val got = modelCache.get(key)
-    if (got != null) got.asInstanceOf[T]
-    else {
-      val lock = modelLocks.synchronized(
-        modelLocks.getOrElseUpdate(key, new Object))
-      lock.synchronized {
-        val again = modelCache.get(key)
-        if (again != null) again.asInstanceOf[T]
-        else {
-          val v = compute
-          modelCache.put(key, v)
-          // supersede-evict by logical prefix (the Tables.memoized /
-          // materializeOnce convention: last '@'-segment is the content
-          // fingerprint) — a regenerated fixture dir must not strand one
-          // stale codebook per regeneration (round-14 ADVICE)
-          val cut = key.lastIndexOf('@')
-          if (cut >= 0) {
-            val logical = key.substring(0, cut + 1)
-            val it = modelCache.keySet().iterator()
-            while (it.hasNext) {
-              val k = it.next()
-              if (k != key && k.startsWith(logical)) it.remove()
-            }
-          }
-          v
-        }
-      }
-    }
-  }
-
-  /** Cheap content fingerprint of a dir's embeddings file, appended to
-    * every model/artifact cache key that derives from it: a fixture dir
-    * REGENERATED in-process (make_probe overwriting a /tmp probe dir,
-    * a spec rewriting its temp fixture) must not be served a stale
-    * trained model. Size+mtime of the parquet file — a local metadata
-    * stat, no job. Immutable driver fixtures fingerprint identically
-    * for the whole JVM, so the fast path is unchanged there. */
-  private def embFp(dir: String): String = Tables.fp(dir, "embeddings")
+  /** Key of a model or artifact learned from a dir's embeddings. */
+  private def embKey(name: String, dir: String): graft.Staged.Key =
+    graft.Staged.key(name, dir, "embeddings")
 
   /** Spherical product-quantization assignment: per subspace, ONE Lloyd
     * refinement from the hash-min `pqK` seed slices (the kmeansAssign
@@ -701,15 +639,15 @@ object Similarity {
     *
     * Scale shape: learn = one N·dim posexplode aggregate (m·k·subdim =
     * 1024 groups cross the wire regardless of N), run ONCE per corpus
-    * (modelOnce); encode = pure map-side projection with the
+    * (Staged.value); encode = pure map-side projection with the
     * 4×16×16-double codebook shipped inside the expression — staged once
-    * as the pq_codes artifact (materializeOnce), so every consuming
+    * as the pq_codes artifact (Staged.layer), so every consuming
     * query reads the 4-byte/vector code table a PQ index actually ships
     * instead of re-encoding the corpus. Returns (staged code frame with
     * c0..c3, refined codebook, code ids). */
   private def pqModel(spark: SparkSession, dir: String)
       : (Array[Array[Array[Double]]], Array[Long]) =
-    modelOnce(s"pq_model@$dir@${embFp(dir)}") {
+    graft.Staged.value(embKey("pq_model", dir)) {
       val e = Tables.spread(Tables.t(spark, dir, "embeddings"))
         .select(col("vec_id"), col("embedding"))
       // Seeds = hash-min k sample (vecSample — works on any id space);
@@ -758,7 +696,7 @@ object Similarity {
   private def pqAssignedFull(spark: SparkSession, dir: String)
       : (DataFrame, Array[Array[Array[Double]]], Array[Long]) = {
     val (cb2, ids) = pqModel(spark, dir)
-    val asg = graft.Pipeline.materializeOnce(spark, s"pq_codes@$dir@${embFp(dir)}") {
+    val asg = graft.Staged.layer(spark, embKey("pq_codes", dir)) {
       val e = Tables.spread(Tables.t(spark, dir, "embeddings"))
         .select(col("vec_id"), col("embedding"))
       (0 until pqM).foldLeft(e) { (d, s) =>
@@ -924,12 +862,12 @@ object Similarity {
   /** IVF cell assignment, shared by annIvf and annRecall: every vector
     * labeled with its nearest-centroid cell. */
   /** The IVF coarse codebook — (centroid vectors, centroid ids), learned
-    * once per corpus (modelOnce: before this, every consuming query
+    * once per corpus (Staged.value: before this, every consuming query
     * re-ran the footer count + hash-min TakeOrdered + C-row collect as
     * its own setup jobs). */
   private[ops] def ivfModel(spark: SparkSession, dir: String)
       : (Array[Array[Float]], Array[Long]) =
-    modelOnce(s"ivf_model@$dir@${embFp(dir)}") {
+    graft.Staged.value(embKey("ivf_model", dir)) {
       // count() is answered from parquet footer metadata (no data scan);
       // the centroid draw is the hash-min TakeOrdered — one scan,
       // C·#partitions rows moved, works on any id space.
@@ -943,14 +881,14 @@ object Similarity {
     }
 
   private def ivfAssigned(spark: SparkSession, dir: String): DataFrame =
-    // The CELL TABLE is a staged artifact (materializeOnce — the
+    // The CELL TABLE is a staged artifact (Staged.layer — the
     // pq_codes shape): (cell, vec_id, embedding) is exactly what an
     // IVF-Flat index SHIPS (inverted lists carrying the vectors), so
     // the assignment scan runs once per corpus and every consumer
     // (sim_ann_ivf, cluster_balance, ivf_retrain, ann_recall's ivf leg)
     // reads the published table — the offline-writes/online-reads
     // deployment shape, not a per-query re-encode.
-    graft.Pipeline.materializeOnce(spark, s"ivf_cells@$dir@${embFp(dir)}") {
+    graft.Staged.layer(spark, embKey("ivf_cells", dir)) {
       val e = Tables.spread(Tables.t(spark, dir, "embeddings"))
       // The codebook is a MODEL PARAMETER (C = ⌈√N⌉ rows, KBs even at
       // 10⁹ vectors), collected once and shipped to executors inside the
@@ -1204,11 +1142,11 @@ object Similarity {
       : (DataFrame, Array[Array[Double]], Array[Long]) = {
     val e = Tables.spread(Tables.t(spark, dir, "embeddings"))
       .select(col("vec_id"), col("embedding"))
-    // the refined centroid matrix is learned once per corpus (modelOnce)
+    // the refined centroid matrix is learned once per corpus (Staged.value)
     // — seed draw, first assignment, and the k·dim mean aggregate are
     // the offline learn pass; consumers only re-run the map-side
     // assignment projection
-    val (cents2, ids2) = modelOnce(s"kmeans_model@$dir@${embFp(dir)}") {
+    val (cents2, ids2) = graft.Staged.value(embKey("kmeans_model", dir)) {
       val k = 8
       val seed = vecSample(spark, dir, k)
         .select(col("vec_id"), col("embedding")).collect()
@@ -1366,12 +1304,12 @@ object Similarity {
       import spark.implicits._
       rows.toDF("m_cluster", "cent")
     }
-    // Stage the scored candidate relation once (materializeOnce — the
+    // Stage the scored candidate relation once (Staged.layer — the
     // staged-dedup-lineage doctrine): every greedy round's lineage
     // references it, and without staging each of the 3 rounds re-runs
     // the kmeans assignment + relevance scan from scratch inside one
     // job tree (measured 3.4 s at sf0.1; Θ(rounds·N·assign) at scale).
-    val cands = graft.Pipeline.materializeOnce(spark, s"mmr_cands@$dir@${embFp(dir)}")(
+    val cands = graft.Staged.layer(spark, embKey("mmr_cands", dir))(
       asg.join(broadcast(centDf), col("cluster") === col("m_cluster"))
         .select(col("cluster"), col("vec_id"), col("embedding"),
           round(cosineHof(col("embedding"), col("cent")), 6).as("rel")))

@@ -375,56 +375,35 @@ object Text {
       .orderBy(col("merge_round"))
   }
 
-  /** Memoized BPE model per (dir, documents fingerprint) — the psiEdges
-    * doctrine applied to the tokenizer family's model parameters: the
-    * merge sequence (≤ BpeRounds small tuples) lives in this map, the
-    * final vocab is a committed staged layer (materializeOnce), and
-    * every later invocation rebuilds its relations from those instead of
-    * re-running the 6-round learn loop (a pair-count aggregate + argmax
-    * collect + mass aggregate per round — ~12 driver-visible jobs) that
-    * EVERY bpe_merges / bpe_encode call previously paid. The model is
-    * deterministic over an immutable input dir, so learning once per
-    * (dir, fp) is observationally identical; a regenerated fixture
-    * fingerprints apart and re-learns. BOUNDEDNESS: one ≤ BpeRounds-
-    * tuple entry per fixture dir the JVM touches — never
-    * data-proportional (the vocab DATA lives in the staged parquet under
-    * materializeOnce's eviction + shutdown-delete contract). */
-  private val bpeMergeCache = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[(Long, String, String, Long, Long)]]()
-
-  /** Learned model for a fixture dir: (merge rows, final vocab as a
-    * committed staged relation). First call per (dir, fp) runs the learn
-    * loop and stages; later calls are a map hit + a staged-parquet read. */
+  /** Learned BPE model for a fixture dir, computed once per documents
+    * content ([[graft.Staged]]) — the psiEdges doctrine applied to the
+    * tokenizer family's model parameters: the merge sequence (≤ BpeRounds
+    * small tuples) is a value, the final vocab a committed staged layer,
+    * and every later invocation rebuilds its relations from those instead
+    * of re-running the 6-round learn loop (a pair-count aggregate +
+    * argmax collect + mass aggregate per round — ~12 driver-visible jobs)
+    * that EVERY bpe_merges / bpe_encode call previously paid. Returns
+    * (merge rows, final vocab as a committed staged relation). */
   private def bpeModel(spark: SparkSession, dir: String)
       : (Seq[(Long, String, String, Long, Long)], DataFrame) = {
-    val mkey = s"$dir@${Tables.fp(dir, "documents")}"
-    val vocab = graft.Pipeline.materializeOnce(spark, s"bpe-vocab&$mkey") {
-      val (learned, v) = bpeLearn(spark,
-        Tables.spread(Tables.t(spark, dir, "documents")))
-      bpeMergeCache.put(mkey, learned)
-      // supersede-evict older fingerprints of the same dir (round-14
-      // ADVICE) — mirrors materializeOnce's eviction of the vocab layer
-      val logical = mkey.substring(0, mkey.lastIndexOf('@') + 1)
-      val it = bpeMergeCache.keySet().iterator()
-      while (it.hasNext) {
-        val k = it.next()
-        if (k != mkey && k.startsWith(logical)) it.remove()
-      }
+    def learn() = bpeLearn(spark,
+      Tables.spread(Tables.t(spark, dir, "documents")))
+    val mergesKey = graft.Staged.key("bpe_merges", dir, "documents")
+    val vocab = graft.Staged.layer(spark,
+        graft.Staged.key("bpe_vocab", dir, "documents")) {
+      val (learned, v) = learn()
+      graft.Staged.value(mergesKey)(learned) // registers with the vocab
       // v stays persisted through the staging write; hand it to the
       // holder so the next call (or the harness's clearCache) releases
       // it — the round-9 bounded-leak contract, now at most one learn
-      // per (dir, fp) instead of one per call
+      // per documents content instead of one per call
       this.synchronized {
         lastBpeVocab.foreach(_.unpersist(blocking = false))
         lastBpeVocab = Some(v)
       }
       v
     }
-    val merges = bpeMergeCache.get(mkey)
-    // same-JVM invariant: the staged layer and the merge entry commit
-    // together (the compute fills the map before the write commits)
-    require(merges != null, s"bpe merge cache missing for $mkey")
-    (merges, vocab)
+    (graft.Staged.value(mergesKey)(learn()._1), vocab)
   }
 
   /** Corpus-parameterized body of bpeMerges — the planted-corpus entry

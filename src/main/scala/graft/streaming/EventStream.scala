@@ -27,82 +27,37 @@ object EventStream {
     StructField("value", DoubleType),
     StructField("props", StringType)))
 
-  /** Staged stream dirs, one per source file — repeated readEvents calls
-    * on the same fixture reuse a single symlink dir instead of leaking a
-    * temp dir per call; all are removed on JVM exit. The hook also
-    * covers the published-artifact dirs and the arrival-permutation dirs
-    * below — every temp parquet this object writes is registered here,
-    * so a JVM run leaks nothing (the round-11 advice found the arrival
-    * dirs outside the hook, leaving a parquet copy of the events table
-    * in /tmp per run). */
-  private val stagedDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def deleteRec(dir: java.nio.file.Path): Unit = {
-    val s = java.nio.file.Files.walk(dir)
-    try s.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-      .forEach(f => java.nio.file.Files.deleteIfExists(f))
-    finally s.close() // Files.walk holds open directory streams
-  }
-  sys.addShutdownHook {
-    Seq(stagedDirs, publishedDirs, arrivalDirs).foreach(_.forEach {
-      (_, staged) =>
-        try deleteRec(java.nio.file.Paths.get(staged))
-        catch { case _: java.io.IOException => () }
-    })
-  }
-
   /** The file-stream source only accepts directories (a real deployment
     * streams a directory of arriving files); a single-file fixture is
-    * staged into a temp dir via symlink, cached per source file (repeated
-    * reads reuse one dir instead of leaking one per call), all removed at
-    * JVM exit. Shared by readEvents / readDocuments / readOrders /
-    * readEmbeddings — one staging rule, four schemas. */
+    * staged into a temp dir via symlink, one per source file
+    * ([[graft.Staged.dir]] — repeated reads reuse one dir instead of
+    * leaking one per call). Shared by readEvents / readDocuments /
+    * readOrders / readEmbeddings — one staging rule, four schemas. */
   private def stagedStreamDir(dir: String, fileName: String): String = {
     // absolute: a relative link target resolves against the temp dir the
     // link lives in, so it would dangle and the stream would read 0 rows
     val p = java.nio.file.Paths.get(dir, fileName).toAbsolutePath.normalize
-    if (java.nio.file.Files.isRegularFile(p)) {
-      stagedDirs.computeIfAbsent(p.toString, { _ =>
-        val d = java.nio.file.Files.createTempDirectory("graft_stream")
-        java.nio.file.Files.createSymbolicLink(d.resolve(fileName), p)
-        d.toString
-      })
-    } else p.toString
+    if (java.nio.file.Files.isRegularFile(p))
+      graft.Staged.dir(graft.Staged.Key("stream", Nil, Seq(p.toString))) {
+        d => java.nio.file.Files.createSymbolicLink(d.resolve(fileName), p)
+      }.toString
+    else p.toString
   }
 
-  /** PUBLISH a static relation a stream will join against: write it to
-    * parquet once and hand the stream the read-back. A stream-static
-    * join re-evaluates the static side's full lineage EVERY MICRO-BATCH
-    * (and once per join when the plan joins it repeatedly) — fine for a
-    * raw table scan, wrong for derived lineage like a corpus-wide
-    * aggregate or signature index: at 100 TB that is a full offline job
-    * re-run per trigger. The round-trip pins the artifact the way a
-    * production deploy would (the offline job WRITES the index; the
-    * online gate READS it) — micro-batches then scan Θ(artifact) bytes.
-    * Same doctrine as collecting benchBloom/corpusCms driver-side, for
-    * relations too big or too structured to ride as a constant. */
-  private val publishedDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** `name` must embed the fixture dir (e.g. s"mm_index@$dir") — the
-    * artifact is the derivation's value AT that dir. */
-  private def publish(df: DataFrame, name: String): DataFrame = {
-    // one artifact per (name, fixture dir) per JVM — the
-    // Pipeline.materializeOnce doctrine: the derivation is deterministic
-    // per dir, so repeated invocations (Bench's warmup + 3 timed passes)
-    // read the artifact instead of re-writing it, exactly like a
-    // production deploy where the offline job ran once. Fixture dirs are
-    // immutable (driver testdata) or fresh temp dirs (specs), so no
-    // staleness window exists.
-    val out = publishedDirs.computeIfAbsent(name, { _ =>
-      val d = java.nio.file.Files
-        .createTempDirectory(
-          "graft_pub_" + name.replaceAll("[^A-Za-z0-9_.-]", "_")).toString
-      df.write.mode("overwrite").parquet(d)
-      d
-    })
-    df.sparkSession.read.parquet(out)
-  }
+  // PUBLISHED static sides: a relation a stream joins against is staged
+  // as a committed layer (graft.Staged.layer, keyed by the table it
+  // derives from) and the stream reads it back. A stream-static join
+  // re-evaluates the static side's full lineage EVERY MICRO-BATCH (and
+  // once per join when the plan joins it repeatedly) — fine for a raw
+  // table scan, wrong for derived lineage like a corpus-wide aggregate or
+  // signature index: at 100 TB that is a full offline job re-run per
+  // trigger. The round-trip pins the artifact the way a production
+  // deploy would (the offline job WRITES the index; the online gate READS
+  // it) — micro-batches then scan Θ(artifact) bytes, and repeated
+  // invocations (Bench's warmup + timed passes) read the artifact instead
+  // of re-writing it. Same doctrine as collecting benchBloom/corpusCms
+  // driver-side, for relations too big or too structured to ride as a
+  // constant.
 
   /** Unbounded read of the events fixture (file-stream source). The file
     * source only accepts directories (a real deployment streams a
@@ -347,16 +302,9 @@ object EventStream {
     * batch dedup survivor rule (min event-time struct): the oracle can
     * only be checking arrival-order semantics if the arrival winner
     * differs from every natural data order. */
-  // BOUNDEDNESS: one entry per fixture dir the JVM drives this query
-  // against (driver sf dirs, per-spec temp dirs, probe dirs — a fixed
-  // handful per run, never data-proportional); the staged copies
-  // themselves are removed by the shutdown hook above.
-  private val arrivalDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def arrivalStagedDir(spark: SparkSession, dir: String): String =
-    arrivalDirs.computeIfAbsent(dir, { _ =>
+    graft.Staged.dir(graft.Staged.key("arrival", dir, "events")) { out =>
       import org.apache.spark.sql.expressions.Window
-      val out = java.nio.file.Files.createTempDirectory("graft_arrival")
       val ranked = graft.Tables.events(spark, dir)
         .select(col("event_id"), col("ts"), col("user_id"),
                 col("event_type"), col("value"))
@@ -376,14 +324,13 @@ object EventStream {
         java.nio.file.Files.move(java.nio.file.Paths.get(part), dst)
         java.nio.file.Files.setLastModifiedTime(dst,
           java.nio.file.attribute.FileTime.fromMillis(mtime))
-        deleteRec(tmp) // only the moved part survives; _SUCCESS/.crc go
+        graft.Staged.deleteRec(tmp) // only the moved part survives
       }
       writeOne(ranked.filter(col("arn") === 1).drop("arn"),
         "f_0000.parquet", 1000000000000L)
       writeOne(ranked.filter(col("arn") =!= 1).drop("arn"),
         "f_0001.parquet", 1000000060000L)
-      out.toString
-    })
+    }.toString
 
   /** Arrival-order streaming dedup, ORACLE-GATED — the last streaming
     * form that was spec-only: dropDuplicatesWithinWatermark keeps each
@@ -653,9 +600,9 @@ object EventStream {
     * StreamingBatch.streamingPsiDrift. */
   def driftCellsStream(spark: SparkSession, dir: String): DataFrame = {
     val audit = graft.ops.Audit
-    val edges = publish(
-      audit.psiEdges(spark, dir).withColumn("jk", lit(1)),
-      s"psi_edges@$dir")
+    val edges = graft.Staged.layer(spark,
+        graft.Staged.key("psi_edges", dir, "orders"))(
+      audit.psiEdges(spark, dir).withColumn("jk", lit(1)))
     spreadStream(readOrders(spark, dir))
       .filter(!audit.psiIsBase) // shared slice rule: NULL dates are current
       .withColumn("jk", lit(1))
@@ -701,12 +648,12 @@ object EventStream {
     // count() is answered from parquet footer metadata, no data scan
     val bits = sim.gateBits(
       graft.Tables.footerCount(spark, dir, "embeddings"))
-    val index = publish(
+    val index = graft.Staged.layer(spark,
+        graft.Staged.key("ann_index", dir, "embeddings"))(
       graft.Tables.spread(graft.Tables.t(spark, dir, "embeddings"))
         .filter(col("vec_id") % 2 === 0)
         .select(sim.signBits(col("embedding"), bits).as("bucket"),
-                col("vec_id").as("c_id"), col("embedding").as("c_emb")),
-      s"ann_index@$dir")
+                col("vec_id").as("c_id"), col("embedding").as("c_emb")))
     spreadStream(readEmbeddings(spark, dir))
       .filter(col("vec_id") % 2 === 1)
       .select(col("vec_id"), col("embedding"),
@@ -767,11 +714,11 @@ object EventStream {
     // the exact benchmark gram set is derived lineage (shingle + distinct
     // over the benchmark split) — publish it so the per-micro-batch join
     // broadcasts the artifact, not a re-run of the derivation
-    val bench = publish(
+    val bench = graft.Staged.layer(spark,
+        graft.Staged.key("bench_grams", dir, "documents"))(
       graft.ops.Curation.docGrams(spark, dir)
         .filter(col("doc_id") % 50 === 0)
-        .select(col("gram")).distinct(),
-      s"bench_grams@$dir")
+        .select(col("gram")).distinct())
     spreadStream(readDocuments(spark, dir))
       .filter(col("doc_id") % 50 =!= 0 && col("text").isNotNull &&
         size(graft.ops.Text.tokens(col("text"))) >= 3)
@@ -815,12 +762,12 @@ object EventStream {
     // even-id payload) EVERY micro-batch — measured 8.0 s vs 1.75 s for
     // the batch gate at sf0.1, the most expensive query of the round-9
     // bench, and Θ(corpus · payload) per trigger at scale.
-    val index = publish(
+    val index = graft.Staged.layer(spark,
+        graft.Staged.key("mm_index", dir, "documents"))(
       mm.perceptualBandIndex(
         mm.perceptualSigs(
           graft.Tables.spread(graft.Tables.t(spark, dir, "documents"))
-            .filter(col("doc_id") % 2 === 0), bits), bits),
-      s"mm_index@$dir")
+            .filter(col("doc_id") % 2 === 0), bits), bits))
     mm.admissionCandidates(
       mm.perceptualSigs(
         spreadStream(readDocuments(spark, dir)
@@ -933,12 +880,12 @@ object EventStream {
     // the profile dim is a corpus-wide aggregate — publish it so each
     // micro-batch broadcasts the artifact instead of re-aggregating the
     // whole events table per trigger
-    val dim = publish(
+    val dim = graft.Staged.layer(spark,
+        graft.Staged.key("enrich_dim", dir, "events"))(
       graft.Tables.events(spark, dir)
         .groupBy(col("user_id"))
         .agg(min(col("ts")).as("first_seen"),
-             count(lit(1)).as("lifetime_events")),
-      s"enrich_dim@$dir")
+             count(lit(1)).as("lifetime_events")))
     readEvents(spark, dir)
       .join(broadcast(dim), Seq("user_id"), "left")
       .select(col("event_id"), col("user_id"), col("event_type"),

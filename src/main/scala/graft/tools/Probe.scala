@@ -93,7 +93,7 @@ object Probe {
     // cluster walls are claimed Θ(candidate pairs), and the claim is only
     // checkable round-over-round if each probe prints the measured pair
     // count next to the wall. Counting reads the staged pair artifacts
-    // the queries above already committed (materializeOnce), so this is
+    // the queries above already committed (Staged.layer), so this is
     // a parquet count, not a re-generation — and it runs only for
     // families whose generator query was in this run's set (a filtered
     // run must never trigger a 2,000 s pair generation as a side

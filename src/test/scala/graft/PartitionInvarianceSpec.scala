@@ -22,7 +22,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * compare as sorted multisets, mirroring the driver comparator.
   *
   * SCOPE of the every-query test: the staged dedup lineage
-  * (Pipeline.materializeOnce) commits on FIRST access per input dir, so
+  * (Staged.layer) commits on FIRST access per input content, so
   * label-consumer queries (group_split, decontam_closure,
   * dedup_survivorship, …) read the same committed parquet in both the
   * 4- and 7-partition runs — for those queries the assertion covers
@@ -62,7 +62,7 @@ class PartitionInvarianceSpec extends AnyFunSuite {
     val key = "spark.sql.shuffle.partitions"
     val before = spark.conf.get(key)
     try {
-      // Each writeDir is a fresh input dir → a fresh materializeOnce
+      // Each writeDir is a fresh input dir → a fresh Staged.layer
       // key → a genuine lineage rebuild; the fixture parquet itself is
       // also LAID OUT under the run's partition setting, so scan split
       // order reshuffles too.

@@ -111,7 +111,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(byId === Map(1L -> None, 2L -> Some(9.5)))
   }
 
-  test("materializeOnce: staged cluster labels == direct recompute, and " +
+  test("Staged.layer: staged cluster labels == direct recompute, and " +
        "later reads come from the committed layer, not the lineage") {
     import graft.ops.Dedup
     def key(r: org.apache.spark.sql.Row) =
@@ -138,5 +138,119 @@ class PipelineSpec extends AnyFunSuite {
       s"staged read should be a scan, found: ${heavy.map(_.nodeName)}")
     assert(again.collect().map(key).sorted.toSeq ===
            staged.collect().map(key).sorted.toSeq)
+  }
+
+  // --- Staged: the one compute-once registry ---------------------------
+
+  /** A temp fixture dir holding table `t` with rows 1..n. */
+  private def fixture(n: Long): String =
+    TestFixtures.writeDir(Map("t" -> (1L to n).toDF("x")))
+
+  private def rewrite(dir: String, n: Long): Unit =
+    (1L to n).toDF("x").coalesce(1).write.mode("overwrite")
+      .parquet(s"$dir/t.parquet")
+
+  /** The module dir a staged layer's read-back lives in. */
+  private def stagedDir(df: org.apache.spark.sql.DataFrame) =
+    java.nio.file.Paths.get(new java.net.URI(df.inputFiles.head))
+      .getParent.getParent
+
+  test("Staged: a repeat call computes nothing; new input content " +
+       "recomputes, evicts the old entry and deletes its staged dir") {
+    val dir = fixture(2)
+    var layers = 0
+    var values = 0
+    def layer() = Staged.layer(spark, Staged.key("spec_layer", dir, "t")) {
+      layers += 1; spark.read.parquet(s"$dir/t.parquet")
+    }
+    def value() = Staged.value(Staged.key("spec_value", dir, "t")) {
+      values += 1; spark.read.parquet(s"$dir/t.parquet").count()
+    }
+    val first = layer()
+    assert(value() === 2L)
+    assert(layer().count() === 2L && value() === 2L)
+    assert(layers === 1 && values === 1, "a hit must not recompute")
+    val firstDir = stagedDir(first)
+    assert(Files.isDirectory(firstDir))
+    rewrite(dir, 3)
+    assert(layer().count() === 3L && value() === 3L)
+    assert(layers === 2 && values === 2)
+    assert(!Files.exists(firstDir), "the superseded layer must be deleted")
+  }
+
+  test("Staged: keys that differ only in a param do not evict each other") {
+    val dir = fixture(2)
+    var calls = 0
+    def value(cap: Int) = Staged.value(
+      Staged.key("spec_param", dir, "t", cap)) { calls += 1; cap * 10 }
+    def layer(cap: Int) = Staged.layer(spark,
+        Staged.key("spec_param_layer", dir, "t", cap)) {
+      calls += 1; spark.read.parquet(s"$dir/t.parquet").limit(cap)
+    }
+    assert(value(1) === 10 && value(2) === 20)
+    assert(value(1) === 10 && value(2) === 20)
+    val one = layer(1)
+    val two = layer(2)
+    assert(layer(1).count() === 1L && layer(2).count() === 2L)
+    assert(calls === 4)
+    assert(Files.isDirectory(stagedDir(one)) &&
+           Files.isDirectory(stagedDir(two)))
+  }
+
+  test("Staged: staging nested inside a compute succeeds") {
+    val dir = fixture(4)
+    val inner = Staged.key("spec_inner", dir, "t")
+    val outer = Staged.layer(spark, Staged.key("spec_outer", dir, "t")) {
+      val v = Staged.value(Staged.key("spec_inner_value", dir, "t"))(
+        Staged.layer(spark, inner)(spark.read.parquet(s"$dir/t.parquet"))
+          .count())
+      Staged.layer(spark, inner)(sys.error("inner is committed"))
+        .withColumn("n", org.apache.spark.sql.functions.lit(v))
+    }
+    assert(outer.collect().map(r => (r.getLong(0), r.getLong(1)))
+      .sorted.toSeq === (1L to 4L).map(_ -> 4L))
+  }
+
+  test("Staged: a throwing compute registers nothing and the next call " +
+       "recomputes") {
+    val dir = fixture(2)
+    val key = Staged.key("spec_throw", dir, "t")
+    var tries = 0
+    intercept[RuntimeException](Staged.layer(spark, key) {
+      tries += 1; sys.error("compute failed")
+    })
+    intercept[RuntimeException](Staged.value(key) {
+      tries += 1; sys.error("compute failed")
+    })
+    assert(Staged.layer(spark, key) {
+      tries += 1; spark.read.parquet(s"$dir/t.parquet")
+    }.count() === 2L)
+    assert(tries === 3)
+  }
+
+  test("Staged.cleanup removes every dir the module created: staged " +
+       "layers, stream, sink, publish and arrival dirs") {
+    val sf = "/root/testdata/sf0.001"
+    val dir = Files.createTempDirectory("graft_fixture")
+    for (t <- Seq("events", "orders"))
+      Files.copy(java.nio.file.Paths.get(sf, s"$t.parquet"),
+        dir.resolve(s"$t.parquet"))
+    val layer = stagedDir(Staged.layer(spark,
+      Staged.key("spec_cleanup", dir.toString, "orders"))(
+      spark.read.parquet(s"$dir/orders.parquet")))
+    graft.streaming.StreamingBatch
+      .streamingDedupArrival(spark, dir.toString).collect() // arrival, sink
+    graft.streaming.StreamingBatch
+      .streamingPsiDrift(spark, dir.toString).collect() // stream, publish
+    val removed = Staged.cleanup()
+    val names = removed.map(_.getFileName.toString)
+    for (prefix <- Seq("graft-staged", "graft_stream", "graft_sink_",
+                       "graft_arrival"))
+      assert(names.exists(_.startsWith(prefix)), s"no $prefix dir")
+    assert(removed.contains(layer))
+    assert(removed.forall(d => !Files.exists(d)),
+      s"left behind: ${removed.filter(Files.exists(_))}")
+    // the registry is empty: a later call stages again
+    assert(Staged.cleanup().isEmpty)
   }
 }

@@ -655,7 +655,7 @@ class PlanSpec extends AnyFunSuite {
       // parallelism shim, conditional on input splits < cores, and a
       // no-op on any real multi-split layout.
       // Audited on the GENERATION plan (perceptualPairs): the shipped
-      // query serves the staged pair artifact (materializeOnce), whose
+      // query serves the staged pair artifact (Staged.layer), whose
       // plan is a parquet scan — the doctrine lives in the compute that
       // writes the artifact.
       graft.ops.Multimodal.perceptualPairs(spark, sf)

@@ -10,6 +10,20 @@ import graft.ops.{Panel, Relational}
   * generated panels. */
 class PropertySpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
+
+  /** (scale, path) of `table` in each fixture the gate runs on. sf0.001
+    * (specs) and sf0.01 (the oracle gate) must exist — a missing one
+    * fails instead of skipping the pin; the bench-only sf0.1 is included
+    * when `bench` is set and the fixture is present. */
+  private def gatedFixtures(table: String,
+                            bench: Boolean): Seq[(String, String)] = {
+    def path(sf: String) = s"/root/testdata/$sf/$table.parquet"
+    for (sf <- Seq("sf0.001", "sf0.01"))
+      assert(new java.io.File(path(sf)).exists(), s"fixture ${path(sf)} is missing")
+    (Seq("sf0.001", "sf0.01") ++
+      Seq("sf0.1").filter(sf => bench && new java.io.File(path(sf)).exists()))
+      .map(sf => sf -> path(sf))
+  }
   import spark.implicits._
 
   private def check(prop: Prop): Unit = {
@@ -221,15 +235,12 @@ class PropertySpec extends AnyFunSuite {
     // rows, the Spark side would move to 9+ bits while the oracles stay
     // at 8 — this fails with the coupling named instead of an opaque
     // hash mismatch in embed_neardup / semantic_dedup / sim_ann_lsh.
-    for (sf <- Seq("sf0.001", "sf0.01", "sf0.1")) {
-      val p = s"/root/testdata/$sf/embeddings.parquet"
-      if (new java.io.File(p).exists()) {
-        val n = spark.read.parquet(p).count()
-        assert(graft.ops.Similarity.adaptiveBits(n) === 8,
-          s"embeddings fixture $sf has $n rows -> adaptiveBits != 8, but " +
-            "the DuckDB oracles for the embedding queries hard-code an " +
-            "8-bit sign-LSH bucket; regenerate the oracle SQL or re-pin")
-      }
+    for ((sf, p) <- gatedFixtures("embeddings", bench = true)) {
+      val n = spark.read.parquet(p).count()
+      assert(graft.ops.Similarity.adaptiveBits(n) === 8,
+        s"embeddings fixture $sf has $n rows -> adaptiveBits != 8, but " +
+          "the DuckDB oracles for the embedding queries hard-code an " +
+          "8-bit sign-LSH bucket; regenerate the oracle SQL or re-pin")
     }
     assert(graft.ops.Similarity.adaptiveBits(200000L) === 12)
     assert(graft.ops.Similarity.adaptiveBits(1L << 40) === 34)
@@ -245,15 +256,12 @@ class PropertySpec extends AnyFunSuite {
     // pin the equality on the fixtures the DuckDB gate actually verifies
     // (sf0.001 specs, sf0.01 driver gate); sf0.1 is bench-only — its 5k
     // documents deliberately get a wider signature (28 bits)
-    for (sf <- Seq("sf0.001", "sf0.01")) {
-      val p = s"/root/testdata/$sf/documents.parquet"
-      if (new java.io.File(p).exists()) {
-        val n = spark.read.parquet(p).count()
-        assert(graft.ops.Multimodal.perceptualBits(n) === 16,
-          s"documents fixture $sf has $n rows -> perceptualBits != 16, " +
-            "but the mm_neardup/mm_clusters oracles hard-code 16-bit " +
-            "signatures; regenerate the oracle SQL or re-pin")
-      }
+    for ((sf, p) <- gatedFixtures("documents", bench = false)) {
+      val n = spark.read.parquet(p).count()
+      assert(graft.ops.Multimodal.perceptualBits(n) === 16,
+        s"documents fixture $sf has $n rows -> perceptualBits != 16, " +
+          "but the mm_neardup/mm_clusters oracles hard-code 16-bit " +
+          "signatures; regenerate the oracle SQL or re-pin")
     }
     // banding-power growth: expected band bucket stays ~<= 64 assets
     assert(graft.ops.Multimodal.perceptualBits(5000L) === 28)
@@ -275,15 +283,12 @@ class PropertySpec extends AnyFunSuite {
     // pqKAdaptive must equal 16 wherever the gate runs — pinned on the
     // actual fixture footer counts so a larger regenerated fixture
     // fails HERE, loudly, instead of silently breaking oracle parity.
-    for (sf <- Seq("sf0.001", "sf0.01", "sf0.1")) {
-      val p = s"/root/testdata/$sf/embeddings.parquet"
-      if (new java.io.File(p).exists()) {
-        val n = spark.read.parquet(p).count()
-        assert(graft.ops.Similarity.pqKAdaptive(n) === 16,
-          s"embeddings fixture $sf has $n rows -> pqKAdaptive != 16, " +
-            "but the pq_codes/sim_ann_pq oracles train 16 codes per " +
-            "subspace; regenerate the oracle SQL or re-pin")
-      }
+    for ((sf, p) <- gatedFixtures("embeddings", bench = true)) {
+      val n = spark.read.parquet(p).count()
+      assert(graft.ops.Similarity.pqKAdaptive(n) === 16,
+        s"embeddings fixture $sf has $n rows -> pqKAdaptive != 16, " +
+          "but the pq_codes/sim_ann_pq oracles train 16 codes per " +
+          "subspace; regenerate the oracle SQL or re-pin")
     }
     // k grows as the pow-2 ceiling of N^(1/4) (full-code space k^4
     // keeps pace with the corpus so ADC ties stay rare), clamped at
@@ -305,15 +310,12 @@ class PropertySpec extends AnyFunSuite {
     // nprobe=1 vs 0.90 at nprobe=2). The oracle texts hard-code the
     // 2-cell probe, so the adaptive value must equal 2 wherever the
     // gate runs — pinned on the actual fixture footer counts.
-    for (sf <- Seq("sf0.001", "sf0.01", "sf0.1")) {
-      val p = s"/root/testdata/$sf/embeddings.parquet"
-      if (new java.io.File(p).exists()) {
-        val n = spark.read.parquet(p).count()
-        assert(graft.ops.Similarity.pqNprobeAdaptive(n) === 2,
-          s"embeddings fixture $sf has $n rows -> pqNprobeAdaptive != 2, " +
-            "but the sim_ann_pq/ann_recall oracles probe 2 cells; " +
-            "regenerate the oracle SQL or re-pin")
-      }
+    for ((sf, p) <- gatedFixtures("embeddings", bench = true)) {
+      val n = spark.read.parquet(p).count()
+      assert(graft.ops.Similarity.pqNprobeAdaptive(n) === 2,
+        s"embeddings fixture $sf has $n rows -> pqNprobeAdaptive != 2, " +
+          "but the sim_ann_pq/ann_recall oracles probe 2 cells; " +
+          "regenerate the oracle SQL or re-pin")
     }
     assert(graft.ops.Similarity.pqNprobeAdaptive(500000L) === 2)
     assert(graft.ops.Similarity.pqNprobeAdaptive(999999L) === 2)

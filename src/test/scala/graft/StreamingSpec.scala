@@ -593,4 +593,49 @@ class StreamingSpec extends AnyFunSuite {
     assert(want.nonEmpty)
     assert(totals(rel.toString) === want)
   }
+
+  // A twin's staged artifacts (the arrival permutation, the published
+  // baseline edges) are keyed by the content of the table they derive
+  // from: rewriting that table in place must not serve the old copy.
+  private val sf = "/root/testdata/sf0.001"
+
+  /** Sorted rows of `df`, for order-free comparison. */
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
+  test("streaming_dedup_arrival after an in-place rewrite of events " +
+       "equals the twin on a fresh dir holding the new bytes") {
+    val ev = spark.read.parquet(s"$sf/events.parquet")
+    val dir = java.nio.file.Files.createTempDirectory("graft_fixture")
+    TestFixtures.replaceTableFile(
+      ev.filter(col("event_id") % 3 =!= 0), dir.toString, "events")
+    def run(d: String) = rows(
+      graft.streaming.StreamingBatch.streamingDedupArrival(spark, d))
+    val before = run(dir.toString)
+    TestFixtures.replaceTableFile(
+      ev.filter(col("event_id") % 3 =!= 1), dir.toString, "events")
+    val fresh = java.nio.file.Files.createTempDirectory("graft_fixture")
+    java.nio.file.Files.copy(dir.resolve("events.parquet"),
+      fresh.resolve("events.parquet"))
+    val want = run(fresh.toString)
+    assert(want !== before, "the rewrite must change the answer")
+    assert(run(dir.toString) === want)
+  }
+
+  test("streaming_psi_drift after an in-place rewrite of orders equals " +
+       "batch psi_drift on the new bytes") {
+    val orders = spark.read.parquet(s"$sf/orders.parquet")
+    val dir = java.nio.file.Files.createTempDirectory("graft_fixture")
+      .toString
+    TestFixtures.replaceTableFile(
+      orders.filter(col("o_orderkey") % 3 =!= 0), dir, "orders")
+    def twin() = rows(
+      graft.streaming.StreamingBatch.streamingPsiDrift(spark, dir))
+    val before = twin()
+    TestFixtures.replaceTableFile(
+      orders.filter(col("o_orderkey") % 3 =!= 1), dir, "orders")
+    val want = rows(graft.ops.Audit.psiDrift(spark, dir))
+    assert(want !== before, "the rewrite must change the answer")
+    assert(twin() === want)
+  }
 }

@@ -37,4 +37,20 @@ object TestFixtures {
     }
     dir
   }
+
+  /** Replace `dir/name.parquet` in place with `df` written as ONE parquet
+    * file — the single-file layout of the driver fixtures, so a stream's
+    * staged symlink keeps pointing at the table. */
+  def replaceTableFile(df: DataFrame, dir: String, name: String): Unit = {
+    val tmp = Files.createTempDirectory("graft_rewrite")
+    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    val s = Files.list(tmp)
+    val part =
+      try s.toArray.map(_.asInstanceOf[java.nio.file.Path])
+        .find(_.getFileName.toString.endsWith(".parquet")).get
+      finally s.close()
+    Files.copy(part, java.nio.file.Paths.get(dir, s"$name.parquet"),
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    Staged.deleteRec(tmp)
+  }
 }
