@@ -27,6 +27,20 @@ object Tables {
     if (name == "events") events(spark, dir)
     else spark.read.parquet(s"$dir/$name.parquet")
 
+  /** WITH-clause entries for SQL-text queries, one per table: `name AS
+    * (SELECT * FROM parquet.<path>)`, where <path> is `<dir>/<name>.parquet`
+    * quoted as an identifier (backticks in it doubled). The statement
+    * names its tables itself, so building it registers no session-global
+    * view and cannot shadow, or be shadowed by, a caller's table of the
+    * same name. Reads exactly what [[t]] reads, except for `events`, whose
+    * ts needs [[events]]' conversion. */
+  def sqlWith(dir: String, names: String*): String =
+    names.map { n =>
+      require(n != "events", "events needs Tables.events' ts conversion")
+      val path = s"$dir/$n.parquet".replace("`", "``")
+      s"$n AS (SELECT * FROM parquet.`$path`)"
+    }.mkString(",\n")
+
   /** Parquet-footer row count, computed once per table content
     * ([[Staged]]). A bare `t(...).count()` is footer-only (no data scan)
     * but still schedules a Spark job — and the per-call sites (quantile

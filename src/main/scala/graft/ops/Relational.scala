@@ -317,20 +317,19 @@ object Relational {
       .orderBy(col("l_returnflag"))
   }
 
-  /** SQL-text front: the same engine consumed as SQL over registered
-    * views (plus the custom cosine_sim/shingles functions registered in
+  /** SQL-text front: the same engine consumed as SQL over the fixture
+    * tables (plus the custom cosine_sim/shingles functions registered in
     * the session) — identical Catalyst plans to the DataFrame API. */
   def sqlText(spark: SparkSession, dir: String): DataFrame = {
-    Tables.t(spark, dir, "lineitem").createOrReplaceTempView("lineitem_v")
-    Tables.t(spark, dir, "documents").createOrReplaceTempView("documents_v")
     graft.functions.GraftFunctions.register(spark)
     spark.sql(
-      """SELECT l.l_returnflag,
+      s"""WITH ${Tables.sqlWith(dir, "lineitem", "documents")}
+        |SELECT l.l_returnflag,
         |       ROUND(SUM(l.l_quantity), 4) AS sum_qty,
         |       COUNT(*) AS n_rows,
         |       (SELECT CAST(SUM(size(shingles(text))) AS BIGINT)
-        |        FROM documents_v) AS total_shingles
-        |FROM lineitem_v l
+        |        FROM documents) AS total_shingles
+        |FROM lineitem l
         |GROUP BY l.l_returnflag
         |ORDER BY l.l_returnflag""".stripMargin)
   }
@@ -342,13 +341,12 @@ object Relational {
     * physical plan), so it scales exactly like the explicit
     * window-rank form in `windowRank`. */
   def sqlLateral(spark: SparkSession, dir: String): DataFrame = {
-    Tables.t(spark, dir, "customer").createOrReplaceTempView("customer_v")
-    Tables.t(spark, dir, "orders").createOrReplaceTempView("orders_v")
     spark.sql(
-      """SELECT c.c_custkey, o.o_orderkey, o.o_totalprice
-        |FROM customer_v c,
+      s"""WITH ${Tables.sqlWith(dir, "customer", "orders")}
+        |SELECT c.c_custkey, o.o_orderkey, o.o_totalprice
+        |FROM customer c,
         |LATERAL (
-        |  SELECT o_orderkey, o_totalprice FROM orders_v
+        |  SELECT o_orderkey, o_totalprice FROM orders
         |  WHERE o_custkey = c.c_custkey
         |  ORDER BY o_totalprice DESC, o_orderkey
         |  LIMIT 2) o
@@ -468,11 +466,11 @@ object Relational {
     * aggregate + join (no per-row subquery execution), the optimizer
     * behavior that makes correlated SQL usable at scale. */
   def sqlCorrelated(spark: SparkSession, dir: String): DataFrame = {
-    Tables.t(spark, dir, "orders").createOrReplaceTempView("orders_v")
     spark.sql(
-      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders_v o
+      s"""WITH ${Tables.sqlWith(dir, "orders")}
+        |SELECT o_orderkey, o_custkey, o_totalprice FROM orders o
         |WHERE o_totalprice > 2 * (SELECT AVG(o2.o_totalprice)
-        |                          FROM orders_v o2
+        |                          FROM orders o2
         |                          WHERE o2.o_custkey = o.o_custkey)
         |ORDER BY o_orderkey""".stripMargin)
   }
@@ -742,20 +740,18 @@ object Relational {
     * ∧ n_late_supp = 1), the single-shuffle form a 100 TB deployment
     * would hand-write if the planner ever regressed. */
   def q21Waiting(spark: SparkSession, dir: String): DataFrame = {
-    Tables.t(spark, dir, "lineitem").createOrReplaceTempView("lineitem_v")
-    Tables.t(spark, dir, "orders").createOrReplaceTempView("orders_v")
-    Tables.t(spark, dir, "supplier").createOrReplaceTempView("supplier_v")
-    Tables.t(spark, dir, "nation").createOrReplaceTempView("nation_v")
     spark.sql(
-      """WITH lf AS (
+      s"""WITH ${Tables.sqlWith(dir, "lineitem", "orders", "supplier",
+                                 "nation")},
+        |lf AS (
         |  SELECT l_orderkey, l_suppkey,
         |         l_shipdate > o_orderdate + INTERVAL 90 DAY AS late
-        |  FROM lineitem_v JOIN orders_v ON l_orderkey = o_orderkey
+        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         |  WHERE o_orderstatus = 'F')
         |SELECT s_name, n_name, COUNT(*) AS numwait
         |FROM lf l1
-        |  JOIN supplier_v ON l1.l_suppkey = s_suppkey
-        |  JOIN nation_v ON s_nationkey = n_nationkey
+        |  JOIN supplier ON l1.l_suppkey = s_suppkey
+        |  JOIN nation ON s_nationkey = n_nationkey
         |WHERE l1.late
         |  AND EXISTS (SELECT 1 FROM lf l2
         |              WHERE l2.l_orderkey = l1.l_orderkey
@@ -814,31 +810,28 @@ object Relational {
     * Dimensions broadcast; the only shuffles are the ps aggregate and
     * its per-part MIN twin. */
   def q2MinCost(spark: SparkSession, dir: String): DataFrame = {
-    Tables.t(spark, dir, "lineitem").createOrReplaceTempView("lineitem_v")
-    Tables.t(spark, dir, "part").createOrReplaceTempView("part_v")
-    Tables.t(spark, dir, "supplier").createOrReplaceTempView("supplier_v")
-    Tables.t(spark, dir, "nation").createOrReplaceTempView("nation_v")
-    Tables.t(spark, dir, "region").createOrReplaceTempView("region_v")
     spark.sql(
-      """WITH ps AS (
+      s"""WITH ${Tables.sqlWith(dir, "lineitem", "part", "supplier",
+                                 "nation", "region")},
+        |ps AS (
         |  SELECT l_partkey AS pk, l_suppkey AS sk,
         |         MIN(CAST(ROUND(l_extendedprice * 100) AS BIGINT))
         |           AS cost_c
-        |  FROM lineitem_v GROUP BY l_partkey, l_suppkey)
+        |  FROM lineitem GROUP BY l_partkey, l_suppkey)
         |SELECT s_acctbal, s_name, n_name, p_partkey, p_type,
         |       CAST(ROUND(cost_c / 100.0, 2) AS DOUBLE) AS supply_cost
-        |FROM part_v
+        |FROM part
         |  JOIN ps ON pk = p_partkey
-        |  JOIN supplier_v ON sk = s_suppkey
-        |  JOIN nation_v ON s_nationkey = n_nationkey
-        |  JOIN region_v ON n_regionkey = r_regionkey
+        |  JOIN supplier ON sk = s_suppkey
+        |  JOIN nation ON s_nationkey = n_nationkey
+        |  JOIN region ON n_regionkey = r_regionkey
         |WHERE r_name = 'EUROPE' AND p_type = 'STANDARD'
         |  AND cost_c = (SELECT MIN(ps2.cost_c)
         |                FROM ps ps2
-        |                  JOIN supplier_v s2 ON ps2.sk = s2.s_suppkey
-        |                  JOIN nation_v n2
+        |                  JOIN supplier s2 ON ps2.sk = s2.s_suppkey
+        |                  JOIN nation n2
         |                    ON s2.s_nationkey = n2.n_nationkey
-        |                  JOIN region_v r2
+        |                  JOIN region r2
         |                    ON n2.n_regionkey = r2.r_regionkey
         |                WHERE r2.r_name = 'EUROPE'
         |                  AND ps2.pk = p_partkey)
@@ -1319,12 +1312,12 @@ object Relational {
     * genuinely inductive queries, and this query pins the feature
     * working end to end against the same SQL in DuckDB. */
   def sqlRecursive(spark: SparkSession, dir: String): DataFrame = {
-    Tables.t(spark, dir, "orders").createOrReplaceTempView("orders")
     val Array(y0, y1) = Tables.t(spark, dir, "orders")
       .agg(min(year(col("o_orderdate"))), max(year(col("o_orderdate"))))
       .head().toSeq.map(_.asInstanceOf[Int]).toArray
     spark.sql(
-      s"""WITH RECURSIVE years(y) AS (
+      s"""WITH RECURSIVE ${Tables.sqlWith(dir, "orders")},
+         |years(y) AS (
          |  SELECT $y0
          |  UNION ALL
          |  SELECT y + 1 FROM years WHERE y < $y1
@@ -1393,10 +1386,9 @@ object Relational {
     * subquery once (broadcast literal) and the NOT EXISTS as an anti
     * hash join — no per-row subqueries. */
   def q22IdleRich(spark: SparkSession, dir: String): DataFrame = {
-    Tables.t(spark, dir, "customer").createOrReplaceTempView("customer")
-    Tables.t(spark, dir, "orders").createOrReplaceTempView("orders")
     spark.sql(
-      """SELECT c_mktsegment, COUNT(*) AS n_cust,
+      s"""WITH ${Tables.sqlWith(dir, "customer", "orders")}
+        |SELECT c_mktsegment, COUNT(*) AS n_cust,
         |       ROUND(SUM(c_acctbal), 4) AS total_bal
         |FROM customer c
         |WHERE c_acctbal > (SELECT ROUND(AVG(c_acctbal) + 1e-9, 4)
@@ -1456,20 +1448,19 @@ object Relational {
     * semi/anti hash joins (no per-row subquery execution) — the
     * companion to joinSemiAnti's DataFrame formulation. */
   def sqlExists(spark: SparkSession, dir: String): DataFrame = {
-    Tables.t(spark, dir, "orders").createOrReplaceTempView("orders_v")
-    Tables.t(spark, dir, "customer").createOrReplaceTempView("customer_v")
     spark.sql(
-      """SELECT c_mktsegment,
-        |  SUM(CASE WHEN EXISTS (SELECT 1 FROM orders_v o
+      s"""WITH ${Tables.sqlWith(dir, "orders", "customer")}
+        |SELECT c_mktsegment,
+        |  SUM(CASE WHEN EXISTS (SELECT 1 FROM orders o
         |                        WHERE o.o_custkey = c.c_custkey
         |                          AND o.o_orderstatus = 'P')
         |      THEN 1 ELSE 0 END) AS n_pending,
         |  SUM(CASE WHEN c_acctbal > 0 AND NOT EXISTS (
-        |        SELECT 1 FROM orders_v o
+        |        SELECT 1 FROM orders o
         |        WHERE o.o_custkey = c.c_custkey
         |          AND o.o_orderpriority = '1-URGENT')
         |      THEN 1 ELSE 0 END) AS n_no_urgent
-        |FROM customer_v c
+        |FROM customer c
         |GROUP BY c_mktsegment
         |ORDER BY c_mktsegment""".stripMargin)
   }

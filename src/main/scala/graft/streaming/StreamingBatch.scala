@@ -1,16 +1,19 @@
 package graft.streaming
 
+import java.util.concurrent.atomic.AtomicReference
+
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Oracle-checkable entry points for the streaming twins whose FINAL
   * tables are deterministic: each runs the actual Structured Streaming
-  * query to completion (file source → memory sink for the bounded
-  * aggregate twins, foreachBatch → parquet for the row-emitting joins,
-  * processAllAvailable) and returns the result as a static DataFrame, so
-  * the DuckDB correctness gate exercises the streaming execution path
-  * itself — not just a batch re-statement of its semantics
+  * query to completion (file source → foreachBatch → one parquet sink
+  * for every twin, processAllAvailable) and returns the committed sink
+  * read back as a static DataFrame, so the DuckDB correctness gate
+  * exercises the streaming execution path itself — not just a batch
+  * re-statement of its semantics
   * (StreamingSpec covers the remaining twins, whose emitted sets depend
   * on watermark horizons or arrival order in ways plain SQL can't
   * restate).
@@ -97,32 +100,14 @@ object StreamingBatch {
       spark.sparkContext.defaultParallelism.toLong, n / 250000L)).toInt
   }
 
-  /** Run a (bounded-source) streaming DataFrame to completion into a
-    * memory sink and hand back the final table. The sink's temp view
-    * survives stop(); a fixed per-query name keeps repeated runs
-    * (Bench warmup + timed repeats) from leaking views.
-    *
-    * Stateful shuffle width: see [[statefulWidth]] — a floor of 4 at
-    * fixture scale (state-store open/commit is the fixed cost that
-    * dominates a bounded local run: measured at sf0.1, the funnel join
-    * reads 14.9s at 32 partitions, 7.0s at 8, 4.6s at 4, 4.4s at 2,
-    * min-of-3 solo), growing with the source so a probe-scale batch is
-    * not a 4-core stateful join. */
-  private def runToTable(df: DataFrame, mode: String, name: String,
-      width: Int = 4): DataFrame = {
-    val spark = df.sparkSession
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", width.toString)
-    try {
-      val q = df.writeStream.outputMode(mode)
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    spark.table(name)
-  }
-
-  /** Conf key for Spark's watermark-closure micro-batches. */
+  /** The session conf a twin run sets: the stateful shuffle width and
+    * Spark's watermark-closure micro-batches. */
+  private val ShufflePartitionsKey = "spark.sql.shuffle.partitions"
   private val NoDataBatchKey = "spark.sql.streaming.noDataMicroBatches.enabled"
+
+  /** Held while a run's conf is set on the caller's session, so two
+    * concurrent starts cannot restore each other's saved value. */
+  private val confLock = new Object
 
   /** One parquet sink dir per (query name, fixture dir), reused across
     * invocations ([[graft.Staged.dir]]) — the round-12 advice: a fresh
@@ -147,156 +132,178 @@ object StreamingBatch {
   }
 
   /** Run a (bounded-source) streaming DataFrame to completion through a
-    * foreachBatch → parquet sink and hand back the written table. The
-    * memory sink above materializes every emitted row IN THE DRIVER —
-    * fine for the aggregate twins whose final tables are key-bounded,
-    * but a stream-stream JOIN's emission is row-proportional: at probe
-    * scale the funnel join's memory sink tripped
-    * spark.driver.maxResultSize at 2.2 GiB, and at 100 TB the idea is
-    * simply wrong. Here each micro-batch writes its emitted rows
-    * executor-side to `out/b<batchId>` (mode=overwrite keyed by batchId,
-    * so a replayed batch is idempotent — the same exactly-once recipe a
-    * production foreachBatch sink uses), and the driver only ever sees
-    * the file listing. */
-  private def runToParquet(df: DataFrame, name: String, dir: String,
-      finish: DataFrame => DataFrame = identity,
+    * foreachBatch → parquet sink and hand back the written table, read
+    * from the committed files — the reference's write-then-read-back of
+    * each layer. Every twin runs here, whatever its output mode:
+    *  - append: each micro-batch writes its emitted rows executor-side
+    *    to `out/b<batchId>` (mode=overwrite keyed by batchId, so a
+    *    replayed batch is idempotent — the exactly-once recipe a
+    *    production foreachBatch sink uses). A driver-side memory sink
+    *    would not do: a stream-stream join's emission is
+    *    row-proportional, and at probe scale the funnel join's memory
+    *    sink tripped spark.driver.maxResultSize at 2.2 GiB.
+    *  - complete: each micro-batch carries the whole result table, so it
+    *    overwrites `out/final` and the last batch's table is the answer.
+    * The read-back takes the schema of the frame the callback wrote, so
+    * it launches no parquet schema-inference job, and it registers
+    * nothing in the caller's catalog.
+    *
+    * `finish` is the sink-side PER-MICRO-BATCH transform (the standard
+    * foreachBatch recipe for a within-batch reduce): callers use it only
+    * where every contributing row of an output key is derived from one
+    * input row by stateless operators — then all of them share a
+    * micro-batch and the within-batch reduce equals the global one, with
+    * ZERO streaming state held across triggers.
+    *
+    * Stateful shuffle `width`: see [[statefulWidth]] — a floor of 4 at
+    * fixture scale (state-store open/commit is the fixed cost that
+    * dominates a bounded local run: measured at sf0.1, the funnel join
+    * reads 14.9s at 32 partitions, 7.0s at 8, 4.6s at 4, 4.4s at 2,
+    * min-of-3 solo), growing with the source so a probe-scale batch is
+    * not a 4-core stateful join.
+    *
+    * `noDataBatch=false` skips the trailing watermark-closure micro-batch
+    * for APPEND twins whose emission is ARRIVAL-driven (inner
+    * stream-stream joins emit each match eagerly the moment both sides
+    * are present; dropDuplicatesWithinWatermark emits each surviving
+    * row in its arrival batch — for both, the watermark bounds STATE
+    * EVICTION only, never emission, which is these twins' own oracle
+    * determinism argument above). A no-data batch can emit nothing for
+    * them (it carries no input rows), so skipping it removes one full
+    * per-invocation round of batch planning, state-store open/commit
+    * across every partition of every stateful operator, and
+    * offset/commit-log writes — measured (StreamProf, 8c, sf0.1 warm):
+    * streaming_funnel 2/8 batches/jobs → 1/4, wall −~35%. Twins whose
+    * EMISSION is watermark-driven (range_frame, resample, sessions —
+    * timers and append-mode aggregate finalization fire exactly in
+    * that closure batch) keep the default.
+    *
+    * Both settings are set on the caller's session only across
+    * `start()`: the query's execution clones the session when it is
+    * constructed, and the micro-batches plan and read these two keys
+    * from that clone. So the caller's session holds its own values again
+    * for the whole run. The twin does not run on a `newSession()`
+    * instead: each new session registers a streaming listener bus on the
+    * shared SparkContext that is never removed, and listeners on the
+    * caller's session would stop seeing the twin's progress. */
+  private def run(df: DataFrame, name: String, dir: String,
+      mode: String = "append", finish: DataFrame => DataFrame = identity,
       width: Int = 4, noDataBatch: Boolean = true): DataFrame = {
     val spark = df.sparkSession
     val out = sinkDir(name, dir)
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", width.toString)
-    // noDataBatch=false skips the trailing watermark-closure micro-batch
-    // for APPEND twins whose emission is ARRIVAL-driven (inner
-    // stream-stream joins emit each match eagerly the moment both sides
-    // are present; dropDuplicatesWithinWatermark emits each surviving
-    // row in its arrival batch — for both, the watermark bounds STATE
-    // EVICTION only, never emission, which is these twins' own oracle
-    // determinism argument above). A no-data batch can emit nothing for
-    // them (it carries no input rows), so skipping it removes one full
-    // per-invocation round of batch planning, state-store open/commit
-    // across every partition of every stateful operator, and
-    // offset/commit-log writes — measured (StreamProf, 8c, sf0.1 warm):
-    // streaming_funnel 2/8 batches/jobs → 1/4, wall −~35%. Twins whose
-    // EMISSION is watermark-driven (range_frame, resample, sessions —
-    // timers and append-mode aggregate finalization fire exactly in
-    // that closure batch) keep the default. */
-    val prevNoData = spark.conf.get(NoDataBatchKey, "true")
-    if (!noDataBatch) spark.conf.set(NoDataBatchKey, "false")
-    try {
-      val q = df.writeStream.outputMode("append")
+    val written = new AtomicReference[StructType]()
+    val q = confLock.synchronized {
+      val saved = Seq(ShufflePartitionsKey, NoDataBatchKey)
+        .map(k => k -> spark.conf.get(k))
+      spark.conf.set(ShufflePartitionsKey, width.toString)
+      if (!noDataBatch) spark.conf.set(NoDataBatchKey, "false")
+      try df.writeStream.outputMode(mode)
         .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-          // `finish` is the sink-side PER-MICRO-BATCH transform (the
-          // standard foreachBatch recipe for a within-batch reduce):
-          // callers use it only where every contributing row of an
-          // output key is derived from one input row by stateless
-          // operators — then all of them share a micro-batch and the
-          // within-batch reduce equals the global one, with ZERO
-          // streaming state held across triggers.
-          finish(batch.toDF()).write.mode("overwrite")
-            .parquet(s"$out/b$batchId")
+          val res = finish(batch.toDF())
+          written.set(res.schema)
+          res.write.mode("overwrite").parquet(
+            if (mode == "complete") s"$out/final" else s"$out/b$batchId")
         }
         .start()
-      try q.processAllAvailable() finally q.stop()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
-      spark.conf.set(NoDataBatchKey, prevNoData)
+      finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
     }
-    // enumerate the per-batch dirs rather than globbing: a glob path
+    try q.processAllAvailable() finally q.stop()
+    // enumerate the sink's dirs rather than globbing: a glob path
     // makes the reader's sink-metadata probe log a spurious
     // FileNotFoundException WARN, and the listing is Θ(batches)
-    val batchDirs = java.nio.file.Files.list(java.nio.file.Paths.get(out))
+    val parts = java.nio.file.Files.list(java.nio.file.Paths.get(out))
       .iterator().asScala.map(_.toString).toSeq.sorted
-    require(batchDirs.nonEmpty, s"streaming sink $name wrote no batches")
-    spark.read.parquet(batchDirs: _*)
+    require(parts.nonEmpty, s"streaming sink $name wrote no batches")
+    spark.read.schema(written.get).parquet(parts: _*)
   }
 
   def streamingTotals(spark: SparkSession, dir: String): DataFrame =
-    runToTable(EventStream.runningTypeTotals(spark, dir),
-      "complete", "sq_totals")
+    run(EventStream.runningTypeTotals(spark, dir), "totals", dir,
+      mode = "complete")
       .orderBy("event_type")
 
   def streamingRangeFrame(spark: SparkSession, dir: String): DataFrame =
-    runToParquet(EventStream.rangeFrameStream(spark, dir), "rangeframe", dir,
+    run(EventStream.rangeFrameStream(spark, dir), "rangeframe", dir,
       width = statefulWidth(spark, dir))
       .orderBy("event_id")
 
   def streamingQuota(spark: SparkSession, dir: String): DataFrame =
-    runToParquet(EventStream.quotaStream(spark, dir), "quota", dir,
+    run(EventStream.quotaStream(spark, dir), "quota", dir,
       width = statefulWidth(spark, dir))
       .orderBy("event_id")
 
   def streamingEnrich(spark: SparkSession, dir: String): DataFrame =
-    runToParquet(EventStream.enrichStream(spark, dir), "enrich", dir,
+    run(EventStream.enrichStream(spark, dir), "enrich", dir,
       width = statefulWidth(spark, dir))
       .orderBy("event_id")
 
   def streamingResample(spark: SparkSession, dir: String): DataFrame =
-    runToParquet(EventStream.resampleStream(spark, dir), "resample", dir,
+    run(EventStream.resampleStream(spark, dir), "resample", dir,
       width = statefulWidth(spark, dir))
       .orderBy("user_id", "bucket")
 
   def streamingSessions(spark: SparkSession, dir: String): DataFrame =
-    runToParquet(EventStream.sessions(spark, dir), "sessions", dir,
+    run(EventStream.sessions(spark, dir), "sessions", dir,
       width = statefulWidth(spark, dir))
       .orderBy("user_id", "session_start")
 
   def streamingIntervalJoin(spark: SparkSession, dir: String): DataFrame =
-    runToParquet(EventStream.clickPurchaseJoin(spark, dir), "interval", dir,
+    run(EventStream.clickPurchaseJoin(spark, dir), "interval", dir,
       width = statefulWidth(spark, dir), noDataBatch = false)
       .orderBy("user_id", "click_ts", "purchase_ts")
 
   def streamingFunnel(spark: SparkSession, dir: String): DataFrame =
-    runToParquet(EventStream.funnelJoinStream(spark, dir), "funnel", dir,
+    run(EventStream.funnelJoinStream(spark, dir), "funnel", dir,
       width = statefulWidth(spark, dir), noDataBatch = false)
       .orderBy("user_id", "view_ts", "click_ts", "purchase_ts")
 
   def streamingDedup(spark: SparkSession, dir: String): DataFrame =
-    runToTable(EventStream.dedupFirstStream(spark, dir),
-      "complete", "sq_dedup", width = statefulWidth(spark, dir))
+    run(EventStream.dedupFirstStream(spark, dir), "dedup", dir,
+      mode = "complete", width = statefulWidth(spark, dir))
       .orderBy("user_id", "event_type")
 
   def streamingDedupArrival(spark: SparkSession, dir: String): DataFrame =
-    runToParquet(EventStream.dedupArrivalStream(spark, dir),
+    run(EventStream.dedupArrivalStream(spark, dir),
       "dedup_arrival", dir, width = statefulWidth(spark, dir),
       noDataBatch = false)
       .orderBy("user_id", "event_type")
 
   def streamingDecontaminate(spark: SparkSession, dir: String): DataFrame =
-    runToTable(EventStream.decontaminateVerifiedStream(spark, dir),
-      "complete", "sq_decontaminate")
+    run(EventStream.decontaminateVerifiedStream(spark, dir),
+      "decontaminate", dir, mode = "complete")
       .orderBy("doc_id")
 
   def streamingHeavyHitters(spark: SparkSession, dir: String): DataFrame =
-    runToTable(EventStream.heavyHittersStream(spark, dir),
-      "complete", "sq_heavyhit")
+    run(EventStream.heavyHittersStream(spark, dir), "heavyhit", dir,
+      mode = "complete")
       .orderBy("gram")
 
   def streamingSeasonal(spark: SparkSession, dir: String): DataFrame =
     graft.ops.Events.seasonalFromCells(
-      runToTable(EventStream.seasonalCellsStream(spark, dir),
-        "complete", "sq_seasonal"))
+      run(EventStream.seasonalCellsStream(spark, dir), "seasonal", dir,
+        mode = "complete"))
 
   def streamingQuality(spark: SparkSession, dir: String): DataFrame =
-    runToTable(EventStream.qualityStream(spark, dir),
-      "complete", "sq_quality")
+    run(EventStream.qualityStream(spark, dir), "quality", dir,
+      mode = "complete")
       .orderBy("n_passed")
 
   def streamingMmAdmission(spark: SparkSession, dir: String): DataFrame =
-    runToParquet(EventStream.mmAdmissionStream(spark, dir), "mm_admission",
+    run(EventStream.mmAdmissionStream(spark, dir), "mm_admission",
       dir,
       finish = graft.ops.Multimodal.admissionFromCandidates)
       .orderBy("doc_id")
 
   def streamingAnnAdmission(spark: SparkSession, dir: String): DataFrame =
-    runToParquet(EventStream.annAdmissionStream(spark, dir),
+    run(EventStream.annAdmissionStream(spark, dir),
       "ann_admission", dir,
       finish = graft.ops.Similarity.admissionFromCandidates)
       .orderBy("vec_id")
 
   def streamingPsiDrift(spark: SparkSession, dir: String): DataFrame =
     graft.ops.Audit.psiStreamReport(spark, dir,
-      runToTable(EventStream.driftCellsStream(spark, dir),
-        "complete", "sq_psidrift"))
+      run(EventStream.driftCellsStream(spark, dir), "psidrift", dir,
+        mode = "complete"))
       .orderBy("bin")
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

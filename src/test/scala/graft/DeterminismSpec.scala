@@ -84,8 +84,7 @@ class DeterminismSpec extends AnyFunSuite {
     // The hash-min vecSample rule must make the whole family run on a
     // remapped fixture whose ids are gapped, offset, and non-zero-based.
     val spark = TestSpark.spark
-    val gapped = java.nio.file.Files
-      .createTempDirectory("graft_gapped").toString
+    val gapped = TestFixtures.tempDir("graft_gapped").toString
     spark.read.parquet(s"$dir/embeddings.parquet")
       .withColumn("vec_id", col("vec_id") * 37 + 1000)
       .write.mode("overwrite").parquet(s"$gapped/embeddings.parquet")

@@ -19,7 +19,7 @@ class FormatsSpec extends AnyFunSuite {
 
   test("CSV round-trip with imposed schema; malformed rows -> null fields " +
        "(PERMISSIVE), count preserved") {
-    val dir = Files.createTempDirectory("graft_fmt").toString
+    val dir = TestFixtures.tempDir("graft_fmt").toString
     val src = Tables.t(spark, "/root/testdata/sf0.001", "documents")
       .select(col("doc_id"), col("lang"),
               length(col("text")).cast("long").as("n"))
@@ -34,7 +34,7 @@ class FormatsSpec extends AnyFunSuite {
 
   test("NDJSON round-trip with imposed schema; corrupt lines surface via " +
        "columnNameOfCorruptRecord, clean lines parse") {
-    val dir = Files.createTempDirectory("graft_fmt").toString
+    val dir = TestFixtures.tempDir("graft_fmt").toString
     val path = s"$dir/rows.jsonl"
     Files.writeString(java.nio.file.Paths.get(path),
       """{"doc_id": 1, "lang": "en", "n": 10}
@@ -59,7 +59,7 @@ class FormatsSpec extends AnyFunSuite {
 
   test("ORC round-trip with imposed schema — the columnar alternative " +
        "when a lake standardizes on ORC") {
-    val dir = Files.createTempDirectory("graft_fmt").toString
+    val dir = TestFixtures.tempDir("graft_fmt").toString
     val src = Tables.t(spark, "/root/testdata/sf0.001", "documents")
       .select(col("doc_id"), col("lang"),
               length(col("text")).cast("long").as("n"))
@@ -78,7 +78,7 @@ class FormatsSpec extends AnyFunSuite {
 
   test("XML round-trip with imposed schema (Spark 4 native XML source) — " +
        "the ingest shape for feed/config-style sources") {
-    val dir = Files.createTempDirectory("graft_fmt").toString
+    val dir = TestFixtures.tempDir("graft_fmt").toString
     val path = s"$dir/rows.xml"
     Files.writeString(java.nio.file.Paths.get(path),
       """<rows>

@@ -19,7 +19,7 @@ class LayoutSpec extends AnyFunSuite {
 
   test("writePartitioned produces per-key dirs and predicates prune " +
        "partitions at the scan") {
-    val dir = Files.createTempDirectory("graft_layout").toString
+    val dir = TestFixtures.tempDir("graft_layout").toString
     val ev = Tables.events(spark, "/root/testdata/sf0.001")
     Pipeline.writePartitioned(ev, s"$dir/events_by_type", Seq("event_type"))
     assert(Files.exists(Paths.get(s"$dir/events_by_type/event_type=click")))
@@ -36,7 +36,7 @@ class LayoutSpec extends AnyFunSuite {
   }
 
   test("compact shrinks the file count and preserves every row") {
-    val dir = Files.createTempDirectory("graft_layout").toString
+    val dir = TestFixtures.tempDir("graft_layout").toString
     val path = s"$dir/events_part"
     val ev = Tables.events(spark, "/root/testdata/sf0.001")
     // force a fragmented layout: many tasks × every partition dir
@@ -56,7 +56,7 @@ class LayoutSpec extends AnyFunSuite {
   test("dynamic partition pruning: a dim-side filter prunes fact " +
        "partitions at RUNTIME, not just static predicates") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_layout").toString
+    val dir = TestFixtures.tempDir("graft_layout").toString
     val ev = Tables.events(spark, "/root/testdata/sf0.001")
     Pipeline.writePartitioned(ev, s"$dir/by_type", Seq("event_type"))
     val fact = spark.read.parquet(s"$dir/by_type")

@@ -14,7 +14,7 @@ class PipelineSpec extends AnyFunSuite {
   private def ts(s: String) = Timestamp.valueOf(s)
 
   test("full run materializes raw + cleaned layers with reconciled counts") {
-    val work = Files.createTempDirectory("graft_pipe").toString
+    val work = TestFixtures.tempDir("graft_pipe").toString
     val counts = Pipeline.run(spark, sf, work, ts("2026-01-01 00:00:00"))
     assert(counts("raw_revenue") > 0)
     assert(counts("raw_revenue") === counts("raw_qty"))
@@ -25,7 +25,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("re-running the same batch converges (idempotent upsert)") {
-    val work = Files.createTempDirectory("graft_pipe").toString
+    val work = TestFixtures.tempDir("graft_pipe").toString
     Pipeline.run(spark, sf, work, ts("2026-01-01 00:00:00"))
     val first = spark.read.parquet(s"$work/cleaned")
       .drop("cleaned_at").orderBy("suppkey", "year").collect().toSeq
@@ -36,7 +36,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("a fresher batch updates conflicting keys and keeps the rest") {
-    val work = Files.createTempDirectory("graft_pipe").toString
+    val work = TestFixtures.tempDir("graft_pipe").toString
     Pipeline.run(spark, sf, work, ts("2026-01-01 00:00:00"))
     // hand-crafted second batch for one existing key and one new key
     val patch = Seq((0L, 1995L, 123.4567), (9999L, 1995L, 1.0))
@@ -59,7 +59,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("readCommitted sees a mid-swap crash's data WITHOUT mutating disk") {
-    val work = Files.createTempDirectory("graft_pipe").toString
+    val work = TestFixtures.tempDir("graft_pipe").toString
     val path = s"$work/sink"
     Pipeline.atomicWrite(
       Seq((1L, 10.0)).toDF("k", "v"), path)
@@ -79,7 +79,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("a crash between swap steps never loses the committed dataset") {
-    val work = Files.createTempDirectory("graft_pipe").toString
+    val work = TestFixtures.tempDir("graft_pipe").toString
     val path = s"$work/raw_revenue"
     val batch = Seq((1L, 2000L, 10.0)).toDF("suppkey", "year", "revenue")
       .withColumn("fetched_at",
@@ -99,8 +99,8 @@ class PipelineSpec extends AnyFunSuite {
 
   test("readEvolved: a later batch's new column surfaces, old rows " +
        "backfill null") {
-    val g1 = Files.createTempDirectory("graft_evo1").toString
-    val g2 = Files.createTempDirectory("graft_evo2").toString
+    val g1 = TestFixtures.tempDir("graft_evo1").toString
+    val g2 = TestFixtures.tempDir("graft_evo2").toString
     Seq((1L, "a")).toDF("id", "x").write.mode("overwrite").parquet(g1)
     Seq((2L, "b", 9.5)).toDF("id", "x", "score")
       .write.mode("overwrite").parquet(g2)
@@ -231,7 +231,7 @@ class PipelineSpec extends AnyFunSuite {
   test("Staged.cleanup removes every dir the module created: staged " +
        "layers, stream, sink, publish and arrival dirs") {
     val sf = "/root/testdata/sf0.001"
-    val dir = Files.createTempDirectory("graft_fixture")
+    val dir = TestFixtures.tempDir("graft_fixture")
     for (t <- Seq("events", "orders"))
       Files.copy(java.nio.file.Paths.get(sf, s"$t.parquet"),
         dir.resolve(s"$t.parquet"))

@@ -910,6 +910,13 @@ class PlanSpec extends AnyFunSuite {
       case _: org.apache.spark.sql.execution.aggregate.BaseAggregateExec
         => true // keys' boundedness is vouched by the allowlist entry
       case _: org.apache.spark.sql.execution.LocalTableScanExec => true
+      // a complete-mode twin's committed result (the `final` dir of its
+      // StreamingBatch sink): the stream aggregate's output table, whose
+      // keys' boundedness the allowlist entry vouches for like any
+      // aggregate's
+      case s: org.apache.spark.sql.execution.FileSourceScanExec
+        if s.relation.location.rootPaths.forall(r => r.getName == "final" &&
+          r.getParent.getName.startsWith("graft_sink_")) => true
       case _ if p.nodeName.contains("Limit") ||
         p.nodeName.startsWith("TakeOrdered") => true
       case a: AdaptiveSparkPlanExec => bounded(a.executedPlan)

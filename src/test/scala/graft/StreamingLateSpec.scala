@@ -26,7 +26,7 @@ class StreamingLateSpec extends AnyFunSuite {
   /** Drop one parquet part-file per call into the stream's events dir
     * (readEvents watches <dir>/events.parquet/). */
   private def addFile(df: DataFrame, streamDir: String, n: Int): Unit = {
-    val staging = Files.createTempDirectory("graft_stage").toString
+    val staging = TestFixtures.tempDir("graft_stage").toString
     df.coalesce(1).write.mode("overwrite").parquet(staging)
     val part = Files.list(Paths.get(staging)).toArray.map(_.toString)
       .filter(_.endsWith(".parquet")).head
@@ -37,7 +37,7 @@ class StreamingLateSpec extends AnyFunSuite {
 
   test("rows behind the watermark are dropped; finalized windows emit " +
        "exactly once") {
-    val streamDir = Files.createTempDirectory("graft_late").toString
+    val streamDir = TestFixtures.tempDir("graft_late").toString
     addFile(eventsDf(
       (1L, "2024-01-01 09:30:00", 1L, "click", 1.0),
       (2L, "2024-01-01 14:00:00", 1L, "click", 1.0)), streamDir, 1)
@@ -109,9 +109,9 @@ class StreamingLateSpec extends AnyFunSuite {
     val rocks = "org.apache.spark.sql.execution.streaming.state." +
       "RocksDBStateStoreProvider"
     for (provider <- Seq(None, Some(rocks))) {
-      val streamDir = Files.createTempDirectory("graft_restart").toString
-      val out = Files.createTempDirectory("graft_restart_out").toString
-      val ckpt = Files.createTempDirectory("graft_restart_ck").toString
+      val streamDir = TestFixtures.tempDir("graft_restart").toString
+      val out = TestFixtures.tempDir("graft_restart_out").toString
+      val ckpt = TestFixtures.tempDir("graft_restart_ck").toString
       addFile(raw.filter(rawTs <= cut), streamDir, 1)
       val provKey = "spark.sql.streaming.stateStore.providerClass"
       val prevProv = spark.conf.getOption(provKey)
@@ -193,9 +193,9 @@ class StreamingLateSpec extends AnyFunSuite {
         // SAME file-per-trigger boundaries, so watermark trajectories
         // (and hence emission sets) are identical by construction.
         def run(phases: Seq[Seq[DataFrame]]): (Seq[(Long, Long, Long, Double)], Boolean) = {
-          val streamDir = Files.createTempDirectory("graft_rf").toString
-          val out = Files.createTempDirectory("graft_rf_out").toString
-          val ckpt = Files.createTempDirectory("graft_rf_ck").toString
+          val streamDir = TestFixtures.tempDir("graft_rf").toString
+          val out = TestFixtures.tempDir("graft_rf_out").toString
+          val ckpt = TestFixtures.tempDir("graft_rf_ck").toString
           var n = 0
           var stateAtKill = false
           phases.zipWithIndex.foreach { case (files, phase) =>
@@ -263,7 +263,7 @@ class StreamingLateSpec extends AnyFunSuite {
       .map(r => (r.getLong(2), r.getString(3)) -> r.getLong(0)).toMap
     assert(want.nonEmpty)
     def addFlat(df: DataFrame, dir: String, name: String): Unit = {
-      val staging = Files.createTempDirectory("graft_arr_stage").toString
+      val staging = TestFixtures.tempDir("graft_arr_stage").toString
       df.coalesce(1).write.mode("overwrite").parquet(staging)
       val part = Files.list(Paths.get(staging)).toArray.map(_.toString)
         .filter(_.endsWith(".parquet")).head
@@ -272,9 +272,9 @@ class StreamingLateSpec extends AnyFunSuite {
     val rocks = "org.apache.spark.sql.execution.streaming.state." +
       "RocksDBStateStoreProvider"
     for (provider <- Seq(None, Some(rocks))) {
-      val streamDir = Files.createTempDirectory("graft_arrdd").toString
-      val out = Files.createTempDirectory("graft_arrdd_out").toString
-      val ckpt = Files.createTempDirectory("graft_arrdd_ck").toString
+      val streamDir = TestFixtures.tempDir("graft_arrdd").toString
+      val out = TestFixtures.tempDir("graft_arrdd_out").toString
+      val ckpt = TestFixtures.tempDir("graft_arrdd_ck").toString
       val provKey = "spark.sql.streaming.stateStore.providerClass"
       val prevProv = spark.conf.getOption(provKey)
       val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
@@ -320,8 +320,8 @@ class StreamingLateSpec extends AnyFunSuite {
 
   test("foreachBatch sink: streamed keyed upsert converges to the batch " +
        "last-writer-wins result") {
-    val streamDir = Files.createTempDirectory("graft_fb").toString
-    val sinkPath = Files.createTempDirectory("graft_sink").toString + "/state"
+    val streamDir = TestFixtures.tempDir("graft_fb").toString
+    val sinkPath = TestFixtures.tempDir("graft_sink").toString + "/state"
     addFile(eventsDf(
       (1L, "2024-01-01 10:00:00", 1L, "click", 1.0),
       (2L, "2024-01-01 10:05:00", 2L, "view", 2.0)), streamDir, 1)

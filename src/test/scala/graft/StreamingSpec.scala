@@ -606,7 +606,7 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming_dedup_arrival after an in-place rewrite of events " +
        "equals the twin on a fresh dir holding the new bytes") {
     val ev = spark.read.parquet(s"$sf/events.parquet")
-    val dir = java.nio.file.Files.createTempDirectory("graft_fixture")
+    val dir = TestFixtures.tempDir("graft_fixture")
     TestFixtures.replaceTableFile(
       ev.filter(col("event_id") % 3 =!= 0), dir.toString, "events")
     def run(d: String) = rows(
@@ -614,7 +614,7 @@ class StreamingSpec extends AnyFunSuite {
     val before = run(dir.toString)
     TestFixtures.replaceTableFile(
       ev.filter(col("event_id") % 3 =!= 1), dir.toString, "events")
-    val fresh = java.nio.file.Files.createTempDirectory("graft_fixture")
+    val fresh = TestFixtures.tempDir("graft_fixture")
     java.nio.file.Files.copy(dir.resolve("events.parquet"),
       fresh.resolve("events.parquet"))
     val want = run(fresh.toString)
@@ -625,7 +625,7 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming_psi_drift after an in-place rewrite of orders equals " +
        "batch psi_drift on the new bytes") {
     val orders = spark.read.parquet(s"$sf/orders.parquet")
-    val dir = java.nio.file.Files.createTempDirectory("graft_fixture")
+    val dir = TestFixtures.tempDir("graft_fixture")
       .toString
     TestFixtures.replaceTableFile(
       orders.filter(col("o_orderkey") % 3 =!= 0), dir, "orders")
@@ -637,5 +637,94 @@ class StreamingSpec extends AnyFunSuite {
     val want = rows(graft.ops.Audit.psiDrift(spark, dir))
     assert(want !== before, "the rewrite must change the answer")
     assert(twin() === want)
+  }
+
+  // Session hygiene: building or running a query leaves the caller's
+  // catalog and conf as it found them. The catalog checks run on a new
+  // session, whose catalog no earlier spec has touched.
+
+  private def tempTables(s: org.apache.spark.sql.SparkSession): Set[String] =
+    s.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
+
+  test("the complete-mode twins leave the caller's temp tables unchanged") {
+    val s = spark.newSession()
+    for (n <- Seq("streaming_totals", "streaming_dedup",
+                  "streaming_decontaminate", "streaming_heavy_hitters",
+                  "streaming_seasonal", "streaming_quality",
+                  "streaming_psi_drift")) {
+      val before = tempTables(s)
+      assert(SparkEntry.queries(n)(s, sf).collect().nonEmpty, n)
+      assert(tempTables(s) === before, n)
+    }
+  }
+
+  test("building a SQL-text query registers no temp view") {
+    val s = spark.newSession()
+    for (n <- Seq("sql_text", "sql_lateral", "sql_correlated", "q2_mincost",
+                  "q21_waiting", "sql_recursive", "q22_idle_rich",
+                  "sql_exists")) {
+      val before = tempTables(s)
+      SparkEntry.queries(n)(s, sf)
+      assert(tempTables(s) === before, n)
+    }
+  }
+
+  test("a twin's state runs at its own width while the caller's shuffle " +
+       "width and no-data-batch setting stay as they were, also from two " +
+       "threads") {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val width = "spark.sql.shuffle.partitions"
+    val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val widths = new java.util.concurrent.ConcurrentLinkedQueue[Long]
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        e.progress.stateOperators.foreach(o =>
+          widths.add(o.numShufflePartitions))
+    }
+    val prevWidth = spark.conf.get(width)
+    val prevNoData = spark.conf.get(noData)
+    spark.conf.set(width, "7")
+    spark.streams.addListener(listener)
+    try {
+      def check(runs: Seq[() => Unit]): Unit = {
+        widths.clear()
+        Await.result(Future.sequence(runs.map(r => Future(r()))), 5.minutes)
+        eventually(timeout(30.seconds)) { assert(!widths.isEmpty) }
+        assert(widths.toArray.toSet === Set(4L))
+        assert(spark.conf.get(width) === "7")
+        assert(spark.conf.get(noData) === prevNoData)
+      }
+      def quota(): Unit =
+        graft.streaming.StreamingBatch.streamingQuota(spark, sf).collect()
+      def interval(): Unit = graft.streaming.StreamingBatch
+        .streamingIntervalJoin(spark, sf).collect()
+      check(Seq(quota _))
+      check(Seq(quota _, interval _))
+    } finally {
+      spark.streams.removeListener(listener)
+      spark.conf.set(width, prevWidth)
+      spark.conf.set(noData, prevNoData)
+    }
+  }
+
+  test("a twin's read-back schema equals an inferred read of its sink, in " +
+       "append and in complete mode") {
+    for (n <- Seq("streaming_quota", "streaming_totals")) {
+      val got = SparkEntry.queries(n)(spark, sf)
+      val sinkDirs = got.inputFiles.map(f =>
+        new org.apache.hadoop.fs.Path(f).getParent.toString).distinct
+      assert(sinkDirs.nonEmpty, n)
+      val inferred = spark.read.parquet(sinkDirs: _*).schema
+      def typed(t: org.apache.spark.sql.types.StructType) =
+        t.fields.map(f => f.name -> f.dataType).toSeq
+      assert(typed(got.schema) === typed(inferred), n)
+    }
   }
 }

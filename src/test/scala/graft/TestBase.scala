@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
 
 /** One shared local SparkSession for all suites. */
 object TestSpark {
@@ -30,8 +30,23 @@ object TestSpark {
   * /root/testdata/sfX so the REAL (SparkSession, dir) => DataFrame query
   * functions can run on them end to end. */
 object TestFixtures {
+  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[Path]
+
+  sys.addShutdownHook(tempDirs.forEach { d =>
+    try Staged.deleteRec(d) catch { case _: java.io.IOException => () }
+  })
+
+  /** A fresh temp dir under `java.io.tmpdir`, deleted when the JVM exits.
+    * Every spec makes its scratch dirs here, so a suite run leaves none
+    * behind. */
+  def tempDir(prefix: String): Path = {
+    val d = Files.createTempDirectory(prefix)
+    tempDirs.add(d)
+    d
+  }
+
   def writeDir(tables: Map[String, DataFrame]): String = {
-    val dir = Files.createTempDirectory("graft_fixture").toString
+    val dir = tempDir("graft_fixture").toString
     tables.foreach { case (name, df) =>
       df.coalesce(1).write.mode("overwrite").parquet(s"$dir/$name.parquet")
     }

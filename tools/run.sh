@@ -8,7 +8,9 @@ if [ "$1" = "graft.Bench" ] && [ -z "$SPARK_GRAFT_ROUND" ]; then
   echo "tools/run.sh: set SPARK_GRAFT_ROUND=rNN for graft.Bench runs" >&2
   exit 2
 fi
-CP="/root/repo/target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
+# the classes of the checkout this script lives in, wherever that is
+ROOT="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
+CP="$ROOT/target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
          java.util java.util.concurrent java.util.concurrent.atomic; do
