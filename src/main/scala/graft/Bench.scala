@@ -48,12 +48,24 @@ object Bench {
     // generated class compiled, on any thread): a query that keeps
     // compiling in the warm passes is missing the generated-code cache.
     def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    // A failed query records -1 in every timing map; its FIRST failure
+    // (exception class and message) goes to BENCH_DETAIL.json's "errors"
+    // so the -1 explains itself. Empty on a green run.
+    val errors = new com.fasterxml.jackson.databind.ObjectMapper()
+      .createObjectNode()
+    def runs(name: String, fn: (org.apache.spark.sql.SparkSession,
+        String) => org.apache.spark.sql.DataFrame): Boolean =
+      try { fn(spark, sfDir).count(); true }
+      catch { case e: Throwable =>
+        if (!errors.has(name)) errors.putObject(name)
+          .put("class", e.getClass.getName).put("message", e.getMessage)
+        false
+      }
     val coldCompiles = collection.mutable.Map[String, Long]()
     val cold = selected.map { case (name, fn) =>
       val c0 = compiles
       val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true }
-               catch { case _: Throwable => false }
+      val ok = runs(name, fn)
       coldCompiles(name) = compiles - c0
       name -> (if (ok)
         math.round((System.nanoTime() - t0) / 1e9 * 1000).toDouble / 1000
@@ -116,8 +128,7 @@ object Bench {
       inFlight.set(0); cpuNanos.set(0); runMillis.set(0)
       val c0 = compiles
       val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true }
-               catch { case _: Throwable => false }
+      val ok = runs(name, fn)
       val dt = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
       warmCompiles(name) =
         math.min(warmCompiles.getOrElse(name, Long.MaxValue), compiles - c0)
@@ -179,6 +190,7 @@ object Bench {
        s""""cpu":${asJson(cpu)},"task_run":${asJson(taskRun)},""" +
        s""""codegen_compiles":{"cold":${asJsonL(bySelected(coldCompiles))},""" +
        s""""warm_min":${asJsonL(bySelected(warmCompiles))}},""" +
+       s""""errors":$errors,""" +
        s""""passes":$passes,"interleaved":true,""" +
        s""""sf":"$sfDir"}""" + "\n")
         .getBytes("UTF-8"))

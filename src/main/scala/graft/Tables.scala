@@ -84,6 +84,9 @@ object Tables {
 
   // --- Reference-shaped schemas (FIXTURES.md §A), used by unit tests ------
 
+  /** Input bytes per spread task: the measured knee (see [[spread]]). */
+  private[graft] val SpreadSliceBytes = 262144L
+
   /** Spread a small scan across all cores for CPU-bound per-row work.
     *
     * Locally the fixture tables are single-row-group parquet files, so the
@@ -118,8 +121,8 @@ object Tables {
     * time, and the dial curve on a 19-query spread-heavy slice at 32c
     * read wall 19.7 / 17.1 / 15.5 / 13.2 / 13.7 s (task CPU 51 / 31 /
     * 19 / 14 / 12 s) at full-p / 64k / 128k / 256k / 512k slices — the
-    * knee is 256 KiB. One slice per `graft.spread.sliceBytes` of
-    * (compressed) input — default 256 KiB ≈ ~1 MB of raw text ≈ 0.3–1 s
+    * knee is 256 KiB. One slice per [[SpreadSliceBytes]] of
+    * (compressed) input — 256 KiB ≈ ~1 MB of raw text ≈ 0.3–1 s
     * of expression-heavy work per task — keeps small tables at a
     * handful of right-sized tasks while any input past cpus×256 KiB
     * still spreads to the full width, so probe/production scans are
@@ -131,15 +134,13 @@ object Tables {
     if (files.length >= p) df
     else if (files.isEmpty) df.repartition(p) // width unknowable: old rule
     else {
-      val slice = sys.props.get("graft.spread.sliceBytes")
-        .flatMap(_.toLongOption).getOrElse(262144L)
       val bytes = files.iterator.map { f =>
         try java.nio.file.Files.size(
           java.nio.file.Paths.get(new java.net.URI(f).getPath))
-        catch { case _: Exception => slice * p } // unknown size: assume big
+        catch { case _: Exception => SpreadSliceBytes * p } // unknown: big
       }.sum
       val width = math.max(1L, math.min(p.toLong,
-        (bytes + slice - 1) / slice)).toInt
+        (bytes + SpreadSliceBytes - 1) / SpreadSliceBytes)).toInt
       if (width <= files.length) df else df.repartition(width)
     }
   }

@@ -302,13 +302,10 @@ object Dedup {
     * labelComponents: 1M edges ≈ 16 MB of longs — comfortably a driver
     * collect (the same order as a broadcast-join build side), while two
     * orders below the 26M-pair candidate graphs the 100× probe produced,
-    * which stay on the distributed path. The system property exists so
-    * a probe run can FORCE the GraphX Pregel branch on real data
-    * (-Dgraft.cc.maxDriverEdges=0) — the branch a 100 TB crawl would
-    * take must carry scale evidence, not just unit-test evidence. */
-  private[graft] def DriverCcMaxEdges: Long =
-    sys.props.get("graft.cc.maxDriverEdges").map(_.toLong)
-      .getOrElse(1000000L)
+    * which stay on the distributed path. A caller forces either branch
+    * through labelComponents' `maxDriverEdges` argument (DedupSpec runs
+    * the GraphX Pregel branch on the sf0.01 candidate graphs that way). */
+  private[graft] val DriverCcMaxEdges: Long = 1000000L
 
   /** Shared connected-components labeler: given an undirected candidate
     * pair relation (two long id columns) and the universe of ids, return

@@ -559,13 +559,6 @@ object Similarity {
   // the layout an in-RAM search tier actually holds at 10⁹+ vectors.
   private val pqM = 4 // subspaces
   private val pqSub = 16 // dims per subspace
-  // PROBE DIALS (-Dgraft.pq.k / -Dgraft.pq.nprobe): dev-only overrides
-  // for the RecallCurve scale measurements — defaults are the shipped
-  // values, and the oracles/specs only ever run at the defaults. A
-  // malformed value fails naming the property (the bandingOn doctrine).
-  private def probeDial(prop: String, dflt: Int): Int =
-    sys.props.get(prop).map(v => v.toIntOption.getOrElse(
-      sys.error(s"-D$prop must be an int, got '$v'"))).getOrElse(dflt)
   /** Codes per subspace — the RESOLUTION dial of the PQ tier, and the
     * round-14 probe's finding: recall at the 2M-vector decade is
     * resolution-bound before it is depth-bound (k=16 → 0.30, k=64 →
@@ -588,7 +581,6 @@ object Similarity {
     if (raw <= 16) 16
     else math.min(256, Integer.highestOneBit(raw - 1) << 1)
   }
-  private def pqK(n: Long): Int = probeDial("graft.pq.k", pqKAdaptive(n))
   /** Probed cells per query — SCALE-ADAPTIVE (round-15, closing the
     * round-14 verdict's 0.90-at-2M residual). The dial is
     * scale-dependent in OPPOSITE directions, so neither constant
@@ -620,15 +612,13 @@ object Similarity {
     * at exactly the scale that earns it. */
   private[graft] def pqNprobeAdaptive(n: Long): Int =
     if (n >= 1000000L) 1 else 2
-  private def pqNprobe(n: Long): Int =
-    probeDial("graft.pq.nprobe", pqNprobeAdaptive(n))
 
   /** Key of a model or artifact learned from a dir's embeddings. */
   private def embKey(name: String, dir: String): graft.Staged.Key =
     graft.Staged.key(name, dir, "embeddings")
 
   /** Spherical product-quantization assignment: per subspace, ONE Lloyd
-    * refinement from the hash-min `pqK` seed slices (the kmeansAssign
+    * refinement from the hash-min `pqKAdaptive` seeds (the kmeansAssign
     * doctrine — deterministic seed + fixed iteration count is what makes
     * a clustering oracle-checkable), cosine-argmax code assignment through
     * the codegen'd CentroidArgmax on `slice(embedding, …)` (map-side, no
@@ -657,7 +647,7 @@ object Similarity {
       // ordered by vec_id (0..k−1, the oracle's ROW_NUMBER()−1), because
       // the recon stage indexes the codebook array by code+1: codes must
       // be dense ordinals even though vec_ids need not be.
-      val k = pqK(Tables.footerCount(spark, dir, "embeddings"))
+      val k = pqKAdaptive(Tables.footerCount(spark, dir, "embeddings"))
       val seed = vecSample(spark, dir, k)
         .select(col("vec_id"), col("embedding")).collect()
         .sortBy(_.getLong(0))
@@ -779,7 +769,7 @@ object Similarity {
         .orderBy(round(cosineHof(col("q_emb"), col("cent")), 6).desc,
                  col("cent_id"))))
       .filter(col("crn") <=
-        pqNprobe(Tables.footerCount(spark, dir, "embeddings")))
+        pqNprobeAdaptive(Tables.footerCount(spark, dir, "embeddings")))
       .select(col("cent_id").as("cell"), col("query_id"), col("q_emb"))
     val c = joined.select(col("cell"), col("vec_id").as("neighbor_id"),
                           recon.as("recon"))
@@ -827,14 +817,9 @@ object Similarity {
     // fraction (frac=2 still 0.90, full pool 1.00 — the full r14 dial
     // grid is in SCALE.md, including fixed-depth-30 scoring 0.00 at
     // any nprobe). The ORACLE computes the identical two-window rule,
-    // so parity holds at every scale by construction. -Dgraft.pq.depth
-    // (probe dial) forces a fixed row cut for measurement runs.
-    val fixedDepth = probeDial("graft.pq.depth", -1)
-    val frac = probeDial("graft.pq.frac", 3) // probe dial, shipped = 3
-    val keep =
-      if (fixedDepth > 0) col("crank") <= lit(fixedDepth.toLong)
-      else col("drank") <= 30L ||
-        col("crank") <= ceil(col("cpool") / frac.toDouble).cast("long")
+    // so parity holds at every scale by construction.
+    val keep = col("drank") <= 30L ||
+      col("crank") <= ceil(col("cpool") / 3.0).cast("long")
     val cand = q.join(c, Seq("cell"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"), round(adc, 6).as("adc"))

@@ -159,8 +159,9 @@ object EventStream {
                        widthUs: Long): org.apache.spark.sql.Column =
     explode(array(bandOf(ts, widthUs), bandOf(ts, widthUs) + 1))
 
+  private val BandMinRows = 1000000L // events rows: see bandingOn
   /** Whether to band this source's stream-stream join keys — a SCALE
-    * dial, fixture-exact like statefulWidth: banding pays one extra
+    * switch, fixture-exact like statefulWidth: banding pays one extra
     * explode (2× left-side state rows) and a band-keyed exchange, and
     * buys probe cost Θ(density × interval) instead of Θ(density ×
     * horizon). Measured both ways: at the 100k-event sf0.1 bench the
@@ -169,21 +170,12 @@ object EventStream {
     * 5.6× (1,080 → 194 s funnel, 62.7 → 7.9 s interval join). Gate on
     * the source's footer count — the same batch-size proxy statefulWidth
     * uses (production would dial this from trigger policy + observed
-    * per-key density). Forcible both ways via -Dgraft.band.minRows
-    * (0 = always band, Long.MaxValue = never), which is how
-    * StreamingSpec pins banded == unbanded bit-equality on the fixtures
-    * the oracle gate runs at — the ivf_retrain both-branches doctrine
-    * applied to the plan dial. */
-  private def bandingOn(spark: SparkSession, dir: String): Boolean = {
-    // fail loudly NAMING the property: an unguarded toLong would throw a
-    // bare NumberFormatException at plan-build time with no hint which
-    // -D was malformed
-    val minRows = sys.props.get("graft.band.minRows").map(v =>
-      v.toLongOption.getOrElse(sys.error(
-        s"-Dgraft.band.minRows must be a long, got '$v'")))
-      .getOrElse(1000000L)
-    graft.Tables.footerCount(spark, dir, "events") >= minRows
-  }
+    * per-key density). StreamingSpec forces the banded side on the
+    * fixtures the oracle gate runs at through the joins' package-private
+    * `banded` argument and pins banded == unbanded bit-equality — the
+    * ivf_retrain both-branches doctrine applied to the plan switch. */
+  private def bandingOn(spark: SparkSession, dir: String): Boolean =
+    graft.Tables.footerCount(spark, dir, "events") >= BandMinRows
   private def withBand(df: DataFrame, on: Boolean, name: String,
                        c: => org.apache.spark.sql.Column): DataFrame =
     if (on) df.withColumn(name, c) else df
@@ -198,8 +190,10 @@ object EventStream {
     * bounded state at any scale; past the [[bandingOn]] row gate the
     * join state is partitioned by (user_id, 1-hour event-time band) —
     * see [[bandOf]] for why the band is in the key. */
-  def clickPurchaseJoin(spark: SparkSession, dir: String): DataFrame = {
-    val banded = bandingOn(spark, dir)
+  def clickPurchaseJoin(spark: SparkSession, dir: String): DataFrame =
+    clickPurchaseJoin(spark, dir, bandingOn(spark, dir))
+  private[graft] def clickPurchaseJoin(spark: SparkSession, dir: String,
+                                       banded: Boolean): DataFrame = {
     val bandUs = 3600L * 1000000L // band width = the 1-hour interval
     val clicks = withBand(
       readEvents(spark, dir)
@@ -241,8 +235,10 @@ object EventStream {
     * (not event_id), so the shape works on streams that carry no global
     * sequence — the common case at ingest. */
   def funnelJoinStream(spark: SparkSession, dir: String,
-                       filesPerTrigger: Option[Int] = None): DataFrame = {
-    val banded = bandingOn(spark, dir)
+                       filesPerTrigger: Option[Int] = None): DataFrame =
+    funnelJoinStream(spark, dir, filesPerTrigger, bandingOn(spark, dir))
+  private[graft] def funnelJoinStream(spark: SparkSession, dir: String,
+      filesPerTrigger: Option[Int], banded: Boolean): DataFrame = {
     val band6Us = 6L * 3600L * 1000000L
     val band12Us = 12L * 3600L * 1000000L
     def leg(t: String, tsName: String, extra: org.apache.spark.sql.Column*)

@@ -31,15 +31,15 @@ object StreamProf {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val jobStart = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+    val jobStart =
+      new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Long]()
     val jobNanos = new java.util.concurrent.atomic.AtomicLong(0)
     val jobCount = new java.util.concurrent.atomic.AtomicLong(0)
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit =
         jobStart.put(js.jobId, System.nanoTime())
       override def onJobEnd(je: SparkListenerJobEnd): Unit = {
-        val t0 = jobStart.remove(je.jobId)
-        if (t0 != null) {
+        Option(jobStart.remove(je.jobId)).foreach { t0 =>
           jobNanos.addAndGet(System.nanoTime() - t0)
           jobCount.incrementAndGet()
         }

@@ -98,6 +98,41 @@ class DedupSpec extends AnyFunSuite {
       Set(1L, 4L, 5L, 6L, 7L, 8L, 9L, 10L, 12L))
   }
 
+  test("labelComponents: both branches label the three public cluster " +
+       "queries' sf0.01 candidate graphs identically") {
+    import org.apache.spark.sql.functions.{col, length}
+    // The union-find side is what the oracle gate checks at sf0.01; cap 0
+    // forces the GraphX Pregel side onto the same pairs and universe, so
+    // both sides answer to the oracle. Each default run must also equal
+    // its public query, which pins the universe to the one it passes.
+    val sf = "/root/testdata/sf0.01"
+    val docs = Tables.t(spark, sf, "documents")
+    val cases = Seq(
+      ("dedup_clusters", Dedup.dedupClusters(spark, sf),
+        Dedup.stagedPairs(spark, sf).select(col("doc_a"), col("doc_b")),
+        docs.select(col("doc_id")), "doc_id"),
+      ("semantic_dedup", Dedup.semanticDedup(spark, sf),
+        Dedup.stagedEmbedPairs(spark, sf, 0.35)
+          .select(col("id_a"), col("id_b")),
+        Tables.t(spark, sf, "embeddings").select(col("vec_id")), "vec_id"),
+      ("mm_clusters", graft.ops.Multimodal.payloadClusters(spark, sf),
+        graft.ops.Multimodal.stagedPerceptualPairs(spark, sf)
+          .select(col("doc_a"), col("doc_b")),
+        docs.filter(col("text").isNotNull && length(col("text")) > 0)
+          .select(col("doc_id")), "doc_id"))
+    for ((name, query, pairs, universe, id) <- cases) {
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
+          .toSeq.sorted
+      def run(cap: Long) =
+        rows(Dedup.labelComponents(spark, pairs, universe, id, cap))
+      val unionFind = run(Dedup.DriverCcMaxEdges)
+      assert(pairs.count() > 0, s"$name: no candidate pairs at sf0.01")
+      assert(unionFind === rows(query), s"$name: universe drifted")
+      assert(run(0L) === unionFind, s"$name: Pregel != union-find")
+    }
+  }
+
   test("embedding near-dup finds planted almost-identical vectors") {
     val v  = Array.tabulate(8)(i => 0.1f * (i + 1))
     val v2 = v.clone(); v2(7) = v2(7) + 0.001f        // near-dup of v

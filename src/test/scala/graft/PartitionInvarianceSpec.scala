@@ -79,4 +79,33 @@ class PartitionInvarianceSpec extends AnyFunSuite {
           s"${a.size} vs ${b.size} rows")
     } finally spark.conf.set(key, before)
   }
+
+  test("Tables.spread sizes a small scan at one task per 256 KiB of " +
+       "input, capped at defaultParallelism") {
+    import org.apache.spark.sql.functions.rand
+    val p = spark.sparkContext.defaultParallelism
+    val slice = Tables.SpreadSliceBytes
+    assert(slice === 262144L)
+    // one parquet file each: random doubles barely compress, so the row
+    // count sets the file size (~8 bytes a row)
+    def table(rows: Long): (org.apache.spark.sql.DataFrame, Long) = {
+      val out = TestFixtures.tempDir("graft_spread").resolve("t").toString
+      spark.range(rows).select(rand(7).as("x"))
+        .coalesce(1).write.parquet(out)
+      val df = spark.read.parquet(out)
+      (df, df.inputFiles.map(f => java.nio.file.Files.size(
+        java.nio.file.Paths.get(new java.net.URI(f)))).sum)
+    }
+    def width(df: org.apache.spark.sql.DataFrame) =
+      Tables.spread(df).rdd.getNumPartitions
+    val (tiny, tinyBytes) = table(100)
+    assert(tinyBytes < slice && width(tiny) === 1, s"$tinyBytes bytes")
+    val (mid, midBytes) = table(70000)
+    val midWidth = ((midBytes + slice - 1) / slice).toInt
+    assert(midWidth > 1 && midWidth < p, s"$midBytes bytes")
+    assert(width(mid) === midWidth)
+    val (big, bigBytes) = table(p * slice / 6)
+    assert(bigBytes >= p * slice, s"$bigBytes bytes")
+    assert(width(big) === p)
+  }
 }

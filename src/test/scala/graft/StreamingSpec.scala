@@ -10,6 +10,8 @@ import graft.streaming.EventStream
   * processAllAvailable. */
 class StreamingSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
+  private def plan(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.analyzed.treeString
 
   test("streaming tumbling counts == batch tumbling counts (append mode, " +
        "finalized windows)") {
@@ -102,70 +104,69 @@ class StreamingSpec extends AnyFunSuite {
 
   test("stream-stream interval join with FORCED key banding emits " +
        "exactly the unbanded set (both-branches pin for the band dial)") {
-    // fixtures sit below the graft.band.minRows gate, so the banded
-    // branch would otherwise only run at probe scale — force it and pin
+    // fixtures sit below the banding row gate, so the banded branch
+    // would otherwise only run at probe scale — force it and pin
     // equality against the same batch truth the unbanded test uses
-    sys.props("graft.band.minRows") = "0"
+    val dir = "/root/testdata/sf0.001"
+    assert(!plan(EventStream.clickPurchaseJoin(spark, dir)).contains("c_band"))
+    val banded = EventStream.clickPurchaseJoin(spark, dir, banded = true)
+    assert(plan(banded).contains("c_band"))
+    val q = banded.writeStream.outputMode("append")
+      .format("memory").queryName("stream_join_banded").start()
     try {
-      val q = EventStream.clickPurchaseJoin(spark, "/root/testdata/sf0.001")
-        .writeStream.outputMode("append")
-        .format("memory").queryName("stream_join_banded").start()
-      try {
-        q.processAllAvailable()
-        val got = spark.table("stream_join_banded").collect()
-          .map(r => (r.getLong(0), r.getTimestamp(1), r.getTimestamp(2),
-                     r.getDouble(3))).toSet
-        val ev = Tables.events(spark, "/root/testdata/sf0.001")
-        val clicks = ev.filter(col("event_type") === "click")
-          .select(col("user_id"), col("ts").as("click_ts"))
-        val purchases = ev.filter(col("event_type") === "purchase")
-          .select(col("user_id").as("p_user"),
-                  col("ts").as("purchase_ts"), col("value"))
-        val want = clicks.join(purchases,
-            col("user_id") === col("p_user") &&
-              col("purchase_ts") >= col("click_ts") &&
-              col("purchase_ts") <= col("click_ts") +
-                expr("INTERVAL 1 HOUR"))
-          .select(col("user_id"), col("click_ts"), col("purchase_ts"),
-                  col("value")).collect()
-          .map(r => (r.getLong(0), r.getTimestamp(1), r.getTimestamp(2),
-                     r.getDouble(3))).toSet
-        assert(want.nonEmpty && got === want)
-      } finally q.stop()
-    } finally sys.props.remove("graft.band.minRows")
+      q.processAllAvailable()
+      val got = spark.table("stream_join_banded").collect()
+        .map(r => (r.getLong(0), r.getTimestamp(1), r.getTimestamp(2),
+                   r.getDouble(3))).toSet
+      val ev = Tables.events(spark, dir)
+      val clicks = ev.filter(col("event_type") === "click")
+        .select(col("user_id"), col("ts").as("click_ts"))
+      val purchases = ev.filter(col("event_type") === "purchase")
+        .select(col("user_id").as("p_user"),
+                col("ts").as("purchase_ts"), col("value"))
+      val want = clicks.join(purchases,
+          col("user_id") === col("p_user") &&
+            col("purchase_ts") >= col("click_ts") &&
+            col("purchase_ts") <= col("click_ts") +
+              expr("INTERVAL 1 HOUR"))
+        .select(col("user_id"), col("click_ts"), col("purchase_ts"),
+                col("value")).collect()
+        .map(r => (r.getLong(0), r.getTimestamp(1), r.getTimestamp(2),
+                   r.getDouble(3))).toSet
+      assert(want.nonEmpty && got === want)
+    } finally q.stop()
   }
 
   test("3-way funnel with FORCED key banding emits exactly the " +
        "unbanded set (both-branches pin for the band dial)") {
     val dir = "/root/testdata/sf0.001"
-    sys.props("graft.band.minRows") = "0"
+    assert(!plan(EventStream.funnelJoinStream(spark, dir)).contains("v_band"))
+    val banded = EventStream.funnelJoinStream(spark, dir, None, banded = true)
+    assert(plan(banded).contains("v_band"))
+    val q = banded.writeStream.outputMode("append")
+      .format("memory").queryName("stream_funnel_banded").start()
     try {
-      val q = EventStream.funnelJoinStream(dir = dir, spark = spark)
-        .writeStream.outputMode("append")
-        .format("memory").queryName("stream_funnel_banded").start()
-      try {
-        q.processAllAvailable()
-        val streamed = spark.table("stream_funnel_banded").collect()
-          .map(r => (r.getLong(0), r.getTimestamp(1), r.getTimestamp(2),
-                     r.getTimestamp(3), r.getDouble(4))).toSet
-        val e = Tables.events(spark, dir)
-        def leg(t: String, n: String) = e.filter(col("event_type") === t)
-          .select(col("user_id").as(s"${n}_u"), col("ts").as(s"${n}_ts"),
-                  col("value").as(s"${n}_v"))
-        val batch = leg("view", "v")
-          .join(leg("click", "c"), col("v_u") === col("c_u") &&
-            col("c_ts") >= col("v_ts") &&
-            col("c_ts") <= col("v_ts") + expr("INTERVAL 6 HOURS"))
-          .join(leg("purchase", "p"), col("c_u") === col("p_u") &&
-            col("p_ts") >= col("c_ts") &&
-            col("p_ts") <= col("c_ts") + expr("INTERVAL 12 HOURS"))
-          .select(col("v_u"), col("v_ts"), col("c_ts"), col("p_ts"),
-                  col("p_v")).collect()
-          .map(r => (r.getLong(0), r.getTimestamp(1), r.getTimestamp(2),
-                     r.getTimestamp(3), r.getDouble(4))).toSet
-        assert(batch.nonEmpty && streamed === batch)
-      } finally q.stop()
-    } finally sys.props.remove("graft.band.minRows")
+      q.processAllAvailable()
+      val streamed = spark.table("stream_funnel_banded").collect()
+        .map(r => (r.getLong(0), r.getTimestamp(1), r.getTimestamp(2),
+                   r.getTimestamp(3), r.getDouble(4))).toSet
+      val e = Tables.events(spark, dir)
+      def leg(t: String, n: String) = e.filter(col("event_type") === t)
+        .select(col("user_id").as(s"${n}_u"), col("ts").as(s"${n}_ts"),
+                col("value").as(s"${n}_v"))
+      val batch = leg("view", "v")
+        .join(leg("click", "c"), col("v_u") === col("c_u") &&
+          col("c_ts") >= col("v_ts") &&
+          col("c_ts") <= col("v_ts") + expr("INTERVAL 6 HOURS"))
+        .join(leg("purchase", "p"), col("c_u") === col("p_u") &&
+          col("p_ts") >= col("c_ts") &&
+          col("p_ts") <= col("c_ts") + expr("INTERVAL 12 HOURS"))
+        .select(col("v_u"), col("v_ts"), col("c_ts"), col("p_ts"),
+                col("p_v")).collect()
+        .map(r => (r.getLong(0), r.getTimestamp(1), r.getTimestamp(2),
+                   r.getTimestamp(3), r.getDouble(4))).toSet
+      assert(batch.nonEmpty && streamed === batch)
+    } finally q.stop()
   }
 
   test("streaming dedup keeps exactly one row per (user, type)") {

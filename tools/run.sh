@@ -19,8 +19,8 @@ done
 for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
-# GRAFT_JAVA_OPTS: extra -D system properties (e.g. the scale-dial
-# overrides -Dgraft.band.minRows=0 / -Dgraft.cc.maxDriverEdges=...)
+# GRAFT_JAVA_OPTS: extra JVM flags passed through as-is (e.g. GC logging
+# or -XX diagnostics); the engine itself reads no -D property
 exec java $ADD_OPENS -Xmx"${SPARK_DRIVER_MEM:-8g}" \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   ${GRAFT_JAVA_OPTS:-} \
