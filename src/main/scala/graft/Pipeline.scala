@@ -92,9 +92,9 @@ object Pipeline {
     * concurrent overwrites needs a table-format commit — same note as
     * the 100 TB swap-in.) */
   def readCommitted(spark: SparkSession, path: String): Option[DataFrame] = {
-    if (Files.exists(Paths.get(path))) Some(spark.read.parquet(path))
+    if (Files.exists(Paths.get(path))) Some(Tables.read(spark, path))
     else if (Files.exists(Paths.get(path + ".old")))
-      Some(spark.read.parquet(path + ".old"))
+      Some(Tables.read(spark, path + ".old"))
     else None
   }
 
@@ -109,7 +109,8 @@ object Pipeline {
     spark.read.option("mergeSchema", "true").parquet(paths: _*)
 
   /** K2: keyed batch upsert into a raw layer path (ON CONFLICT DO UPDATE
-    * semantics — database.py:119-138). */
+    * semantics — database.py:119-138). Returns the committed layer's row
+    * count, read from its footers (no job). */
   def upsertRaw(spark: SparkSession, incoming: DataFrame, path: String): Long = {
     val merged = readCommitted(spark, path) match {
       case Some(existing) =>
@@ -118,7 +119,7 @@ object Pipeline {
       case None => incoming
     }
     atomicWrite(merged, path)
-    spark.read.parquet(path).count()
+    Tables.rowCount(spark, path)
   }
 
   /** E1 ingest: derive the two indicator panels from lineitem (the
@@ -144,7 +145,8 @@ object Pipeline {
   /** E2 transform: join the raw layers, drop incomplete rows, compute the
     * window features, stamp cleaned_at, write the cleaned layer
     * (transformer.py:58-154). The cleaned layer is a pure recomputation of
-    * its inputs, so idempotency = deterministic transform + overwrite. */
+    * its inputs, so idempotency = deterministic transform + overwrite.
+    * Returns the committed layer's footer row count. */
   def transform(spark: SparkSession, workDir: String,
                 batchTs: java.sql.Timestamp): Long = {
     def layer(name: String) = readCommitted(spark, s"$workDir/$name")
@@ -158,7 +160,7 @@ object Pipeline {
     val cleaned = Panel.features(j, "suppkey", "year", Seq("revenue", "qty"))
       .withColumn("cleaned_at", lit(batchTs))
     atomicWrite(cleaned, s"$workDir/cleaned")
-    spark.read.parquet(s"$workDir/cleaned").count()
+    Tables.rowCount(spark, s"$workDir/cleaned")
   }
 
   /** Hive-style partitioned layout: one directory per distinct value of

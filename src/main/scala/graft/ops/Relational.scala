@@ -73,7 +73,7 @@ object Relational {
   def rowCounts(spark: SparkSession, dir: String): DataFrame = {
     Tables.ensureNanosAsLong(spark)
     Tables.names.map { n =>
-      spark.read.parquet(s"$dir/$n.parquet")
+      Tables.read(spark, s"$dir/$n.parquet")
         .agg(count(lit(1)).as("n_rows"))
         .select(lit(n).as("tbl"), col("n_rows"))
     }.reduce(_.unionByName(_)).orderBy(col("tbl"))

@@ -69,13 +69,13 @@ object EventStream {
     val streamDir = stagedStreamDir(dir, "events.parquet")
     // Match the batch loader's timestamp acceptance (Tables.events): the
     // stream schema must mirror what the parquet footer actually stores,
-    // so peek it with a batch read (footer-only) and normalize the same
-    // three ways — nanos-as-long, NTZ wall clock (≡ instant under the
-    // UTC session), or already-instant.
+    // so peek it from the footer (Tables.read: driver-side, no job) and
+    // normalize the same three ways — nanos-as-long, NTZ wall clock
+    // (≡ instant under the UTC session), or already-instant.
     // (an empty not-yet-populated stream dir can't be peeked — fall back
     // to the fixture default, INT64 nanos)
     val storedTs =
-      try spark.read.parquet(streamDir).schema("ts").dataType
+      try graft.Tables.read(spark, streamDir).schema("ts").dataType
       catch { case _: org.apache.spark.sql.AnalysisException => LongType }
     val reader = spark.readStream.schema(rawSchema(storedTs))
     filesPerTrigger.foreach(n =>

@@ -69,3 +69,30 @@ object TestFixtures {
     Staged.deleteRec(tmp)
   }
 }
+
+/** Count the Spark jobs a block starts. */
+object Jobs {
+  import org.apache.spark.graft.ListenerBridge
+  import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+  import scala.jdk.CollectionConverters._
+
+  /** `body`'s result and the SQL execution id of every job started while
+    * it ran: None for a job outside any SQL execution (a parquet
+    * schema-inference job, an RDD action). */
+  def during[T](spark: SparkSession)(body: => T): (T, Seq[Option[String]]) = {
+    val ids = new java.util.concurrent.ConcurrentLinkedQueue[Option[String]]
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        ids.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.sql.execution.id"))))
+    }
+    val sc = spark.sparkContext
+    ListenerBridge.drain(sc)
+    sc.addSparkListener(l)
+    try {
+      val r = body
+      ListenerBridge.drain(sc)
+      (r, ids.asScala.toSeq)
+    } finally sc.removeSparkListener(l)
+  }
+}
