@@ -3,8 +3,7 @@ import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.graft.ListenerBridge
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-  SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -62,6 +61,20 @@ object Bench {
           .put("class", e.getClass.getName).put("message", e.getMessage)
         false
       }
+    val coldCompiles = collection.mutable.Map[String, Long]()
+    val cold = selected.map { case (name, fn) =>
+      val c0 = compiles
+      val t0 = System.nanoTime()
+      val ok = runs(name, fn)
+      coldCompiles(name) = compiles - c0
+      name -> (if (ok)
+        math.round((System.nanoTime() - t0) / 1e9 * 1000).toDouble / 1000
+      else -1.0)
+    }
+    // Queries may persist() shared sub-results internally; clear between
+    // runs so no query is timed against another run's (or the warmup's)
+    // cache, and cache memory stays bounded.
+    spark.catalog.clearCache()
     // Per-query task metrics via a listener, read (and reset) around EVERY
     // query in EVERY pass — the listener bus is drained before each read so
     // async delivery can't smear one query's metrics into the next. Three
@@ -75,22 +88,13 @@ object Bench {
     //     but not CPU is the host, and one that shows in CPU is the code.
     //   - executorRunTime: task wall time — the CPU/run ratio is a direct
     //     per-query contention gauge (≈1 quiet, drops under pressure).
-    //   - jobs started outside any SQL execution (no
-    //     spark.sql.execution.id): parquet schema inference and RDD
-    //     actions, which a warm build should not run. Counted in the cold
-    //     run too, so the listener is attached before it.
     // Reading per pass (not accumulating across passes) is also what keeps
     // the counters meaningful after pass 1 — the round-8 form left the
     // listener attached and inFlight accumulating through passes 2-3.
     val inFlight = new AtomicLong(0)
     val cpuNanos = new AtomicLong(0)
     val runMillis = new AtomicLong(0)
-    val nonSqlJobs = new AtomicLong(0)
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties == null ||
-            e.properties.getProperty("spark.sql.execution.id") == null)
-          nonSqlJobs.incrementAndGet()
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
         val m = e.taskMetrics
         if (m != null) {
@@ -101,25 +105,6 @@ object Bench {
       }
     }
     spark.sparkContext.addSparkListener(listener)
-    val coldCompiles = collection.mutable.Map[String, Long]()
-    val coldNonSql = collection.mutable.Map[String, Long]()
-    val cold = selected.map { case (name, fn) =>
-      ListenerBridge.drain(spark.sparkContext)
-      nonSqlJobs.set(0)
-      val c0 = compiles
-      val t0 = System.nanoTime()
-      val ok = runs(name, fn)
-      coldCompiles(name) = compiles - c0
-      ListenerBridge.drain(spark.sparkContext)
-      coldNonSql(name) = nonSqlJobs.get()
-      name -> (if (ok)
-        math.round((System.nanoTime() - t0) / 1e9 * 1000).toDouble / 1000
-      else -1.0)
-    }
-    // Queries may persist() shared sub-results internally; clear between
-    // runs so no query is timed against another run's (or the warmup's)
-    // cache, and cache memory stays bounded.
-    spark.catalog.clearCache()
     // A failed query records -1 — a thrown regression must never read as
     // a (faster) success in the benchmark JSON. Each query is timed THREE
     // times and the minimum reported: single-shot wall times on a shared
@@ -138,10 +123,9 @@ object Bench {
     val cpuSecs = collection.mutable.Map[String, Vector[Double]]()
     val runSecs = collection.mutable.Map[String, Vector[Double]]()
     val warmCompiles = collection.mutable.Map[String, Long]()
-    val warmNonSql = collection.mutable.Map[String, Long]()
     for (pass <- 1 to passes; (name, fn) <- selected) {
       ListenerBridge.drain(spark.sparkContext)
-      inFlight.set(0); cpuNanos.set(0); runMillis.set(0); nonSqlJobs.set(0)
+      inFlight.set(0); cpuNanos.set(0); runMillis.set(0)
       val c0 = compiles
       val t0 = System.nanoTime()
       val ok = runs(name, fn)
@@ -151,8 +135,6 @@ object Bench {
       times(name) = times.getOrElse(name, Vector.empty) :+ dt
       ListenerBridge.drain(spark.sparkContext)
       if (pass == 1) shuffleBytes(name) = inFlight.get()
-      warmNonSql(name) =
-        math.min(warmNonSql.getOrElse(name, Long.MaxValue), nonSqlJobs.get())
       cpuSecs(name) = cpuSecs.getOrElse(name, Vector.empty) :+
         (if (ok) cpuNanos.get() / 1e9 else -1.0)
       runSecs(name) = runSecs.getOrElse(name, Vector.empty) :+
@@ -208,8 +190,6 @@ object Bench {
        s""""cpu":${asJson(cpu)},"task_run":${asJson(taskRun)},""" +
        s""""codegen_compiles":{"cold":${asJsonL(bySelected(coldCompiles))},""" +
        s""""warm_min":${asJsonL(bySelected(warmCompiles))}},""" +
-       s""""non_sql_jobs":{"cold":${asJsonL(bySelected(coldNonSql))},""" +
-       s""""warm_min":${asJsonL(bySelected(warmNonSql))}},""" +
        s""""errors":$errors,""" +
        s""""passes":$passes,"interleaved":true,""" +
        s""""sf":"$sfDir"}""" + "\n")

@@ -185,8 +185,8 @@ object Pipeline {
   def compact(spark: SparkSession, path: String, parts: Seq[String],
               rowsPerFile: Long = 1000000L): Unit = {
     restoreIfCrashed(path) // compact IS a writer — restoring is its job
-    val df = spark.read.parquet(path)
-    val n = math.max(1, (df.count() / rowsPerFile)).toInt
+    val df = Tables.read(spark, path)
+    val n = math.max(1, Tables.rowCount(spark, path) / rowsPerFile).toInt
     df.repartition(n, parts.map(col): _*)
       .write.mode(SaveMode.Overwrite).partitionBy(parts: _*)
       .parquet(path + ".tmp")

@@ -261,7 +261,7 @@ object Dedup {
       threshold: Double): DataFrame = {
     // Bucket width scales with N (8 bits at fixture sizes, more as the
     // corpus grows) so expected in-bucket pairing stays Θ(N·64·probes),
-    // not N²/256 — see Similarity.adaptiveBits. N comes from the footers.
+    // not N²/256 — see Similarity.adaptiveBits. count() is footer-only.
     val bits = Similarity.gateBits(
       Tables.footerCount(spark, dir, "embeddings"))
     val e = Tables.spread(Tables.t(spark, dir, "embeddings"))

@@ -72,8 +72,9 @@ object StreamingBatch {
     * cost curve was measured in; capped at the session's parallelism.
     * A production deploy gets this sizing from its trigger/batch
     * policy and executor count — here the bounded source's footer count
-    * is the honest stand-in (footers read on the driver, no job;
-    * computed once per table content in Tables.footerCount). Note the
+    * is the honest stand-in (no data scan; computed once per table
+    * content in Tables.footerCount, so 17 twins × Bench repeats pay
+    * one count job per fixture dir, not one per invocation). Note the
     * parallelism CAP binds before the rows/250k divisor on big sources:
     * under the probe's documented SPARK_GRAFT_CPUS=16 the width tops out
     * at 16; it reaches 32 only on a 32-core session.
