@@ -1,8 +1,9 @@
 package graft
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.FooterBridge
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths}
 import graft.ops.{Panel, Relational}
 
 /** The reference's end-to-end pipeline orchestration (README1.md run
@@ -22,6 +23,15 @@ import graft.ops.{Panel, Relational}
   * reading. Re-runs converge (idempotency by construction,
   * README1.md:128-132). At 100 TB the swap becomes a partition-level
   * replaceWhere / table-format commit; the dataflow is identical.
+  *
+  * Storage. A layer path is any Hadoop path (a local path, a `file:` or
+  * `hdfs:` URI): the commit stats, renames and deletes through Hadoop
+  * `FileSystem` under the session's Hadoop conf, the one [[Tables.read]]
+  * uses, and layers are read and counted through [[Tables]]' one file
+  * lister. The rename commit is atomic on HDFS and the local FS, where a
+  * dir rename is one metadata operation; on an object store (S3, GCS) a
+  * "rename" is a copy plus delete, so a reader can see a half-moved
+  * layer there, and the commit needs a table format instead.
   */
 object Pipeline {
 
@@ -50,31 +60,45 @@ object Pipeline {
     * between tmp-move and cleanup) safe to delete.
     * CONTRACT for read-merge-write callers (upsertRaw, foreachBatch
     * sinks): read the current state via `readCommitted` — a caller that
-    * checks Files.exists itself after a crash would merge against
+    * checks the live path itself after a crash would merge against
     * nothing and this writer would then faithfully commit that empty
     * merge. WRITERS are single-flight per path: this move sequence is
     * the writer's own crash recovery; readers never mutate (see
     * readCommitted), so a concurrent reader cannot break an in-flight
     * commit. */
   private def swapIn(path: String): Unit = {
-    val target = Paths.get(path)
-    val old = Paths.get(path + ".old")
+    val target = new Path(path)
+    val old = new Path(path + ".old")
+    val fs = fileSystem(target)
     restoreIfCrashed(path)
-    if (Files.exists(old)) Staged.deleteRec(old) // target exists too → leftover
-    val hadTarget = Files.exists(target)
-    if (hadTarget) Files.move(target, old)
-    Files.move(Paths.get(path + ".tmp"), target)
-    if (hadTarget) Staged.deleteRec(old)
+    if (fs.exists(old)) fs.delete(old, true) // target exists too → leftover
+    val hadTarget = fs.exists(target)
+    if (hadTarget) rename(fs, target, old)
+    rename(fs, new Path(path + ".tmp"), target)
+    if (hadTarget) fs.delete(old, true)
   }
 
   /** Crash recovery for atomicWrite: if a crash happened between the
     * aside-rename and the tmp→live move, the live path is missing but
     * `<path>.old` still holds the last committed dataset — restore it. */
   def restoreIfCrashed(path: String): Unit = {
-    val target = Paths.get(path)
-    val old = Paths.get(path + ".old")
-    if (!Files.exists(target) && Files.exists(old)) Files.move(old, target)
+    val target = new Path(path)
+    val old = new Path(path + ".old")
+    val fs = fileSystem(target)
+    if (!fs.exists(target) && fs.exists(old)) rename(fs, old, target)
   }
+
+  /** Hadoop's rename reports failure by returning false, and moves the
+    * source INTO a destination dir that exists; callers rename only onto
+    * an absent path, so false is an error. */
+  private def rename(fs: FileSystem, from: Path, to: Path): Unit =
+    if (!fs.rename(from, to))
+      throw new java.io.IOException(s"could not rename $from to $to")
+
+  /** The file system of a layer path, under the active session's Hadoop
+    * conf. Shared through Hadoop's cache, so never closed here. */
+  private def fileSystem(p: Path): FileSystem =
+    p.getFileSystem(FooterBridge.hadoopConf(SparkSession.active))
 
   /** Crash-safe read of a layer path WITHOUT mutating it: prefer the
     * live dir; fall back to reading a stranded `.old` copy IN PLACE
@@ -92,10 +116,9 @@ object Pipeline {
     * concurrent overwrites needs a table-format commit — same note as
     * the 100 TB swap-in.) */
   def readCommitted(spark: SparkSession, path: String): Option[DataFrame] = {
-    if (Files.exists(Paths.get(path))) Some(Tables.read(spark, path))
-    else if (Files.exists(Paths.get(path + ".old")))
-      Some(Tables.read(spark, path + ".old"))
-    else None
+    val fs = fileSystem(new Path(path))
+    Seq(path, path + ".old").find(p => fs.exists(new Path(p)))
+      .map(Tables.read(spark, _))
   }
 
   /** Read a layer whose batches were written under EVOLVING schemas
@@ -163,19 +186,9 @@ object Pipeline {
     Tables.rowCount(spark, s"$workDir/cleaned")
   }
 
-  /** Hive-style partitioned layout: one directory per distinct value of
-    * `parts`. At 100 TB this is what turns an equality predicate on the
-    * partition key into DIRECTORY pruning — the scan never opens
-    * non-matching partitions (PartitionFilters in the plan, asserted in
-    * LayoutSpec). Partition keys must be low-cardinality (event_type,
-    * date, lang) — high-cardinality keys create the small-file problem
-    * `compact` exists to fix. */
-  def writePartitioned(df: DataFrame, path: String,
-                       parts: Seq[String]): Unit =
-    df.write.mode(SaveMode.Overwrite)
-      .partitionBy(parts: _*).parquet(path)
-
-  /** Small-file compaction: rewrite a partitioned dataset so each
+  /** Small-file compaction: rewrite a hive-style partitioned dataset
+    * (one directory per partition-key value, which turns an equality
+    * predicate on the key into directory pruning) so each
     * partition directory holds ~one file per `rowsPerFile` rows
     * (repartitioning BY the partition keys keeps each output task
     * writing into a single directory — without it every task writes a

@@ -1,7 +1,9 @@
 package graft
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import java.nio.file.{Files, Path, Paths}
+import org.apache.spark.sql.execution.datasources.parquet.FooterBridge
+import java.nio.file.{Files, Path}
 import java.util.Comparator
 import scala.collection.mutable
 
@@ -14,7 +16,9 @@ import scala.collection.mutable
   *
   * Identity. An entry is keyed by its [[Key]] and carries the content
   * fingerprints of the key's input tables, taken by this module on every
-  * lookup. A call whose fingerprints match is a hit; a call with new
+  * lookup (see `fp`: the relative path, length and mtime of every data
+  * file [[Tables]]' one lister yields). A call whose fingerprints match
+  * is a hit; a call with new
   * fingerprints (a fixture dir regenerated in-process — make_probe
   * overwriting a probe dir, a spec rewriting its temp fixture, a refresh
   * cycle) computes again, replaces the entry and deletes the superseded
@@ -37,8 +41,11 @@ import scala.collection.mutable
   * Dirs. Every dir this module creates lives under `java.io.tmpdir`
   * (staged layers with the `graft-staged` prefix, other dirs with
   * `graft_<key name>`), belongs to exactly one entry, and is removed by
-  * [[cleanup]] — run once by the one shutdown hook below. Only valid for
-  * DETERMINISTIC computes: a hit is observationally a recompute. */
+  * [[cleanup]] — run once by the one shutdown hook below. These local
+  * dirs are the only paths handled through `java.nio`; input tables are
+  * read through Hadoop `FileSystem`, and a staged layer commits through
+  * [[Pipeline.atomicWrite]]. Only valid for DETERMINISTIC computes: a hit
+  * is observationally a recompute. */
 object Staged {
 
   /** What a computation is: its logical `name`, the fixture tables it
@@ -131,50 +138,37 @@ object Staged {
   private def quietDelete(p: Path): Unit =
     try deleteRec(p) catch { case _: java.io.IOException => () }
 
-  /** Cheap content fingerprint of one fixture table. Local-FS stat (size +
-    * mtime) PLUS an MD5 of the file's last 4 KiB — the parquet footer
-    * region, which encodes row-group offsets and column statistics, so two
-    * same-size rewrites within one coarse-mtime tick (fast spec rewrites on
-    * ext4's second-granularity mtime) still fingerprint apart unless the
-    * data is byte-identical, in which case staleness is vacuous. A 4 KiB
-    * local read per call, no job. For a partitioned dir: part count +
-    * total bytes + max mtime + a hash of the sorted file-name set (a
-    * regeneration that renames parts — every Spark/DuckDB write does —
-    * changes the key even when sizes collide). Immutable fixtures
+  /** Cheap content fingerprint of one input table: the relative path,
+    * length and mtime of every data file [[Tables.dataFiles]] lists (so
+    * partition dirs are descended and `_SUCCESS` does not count), under
+    * the active session's Hadoop conf. A table of ONE data file also adds
+    * an MD5 of the file's last 4 KiB — the parquet footer region, which
+    * encodes row-group offsets and column statistics, so two same-size
+    * rewrites within one coarse-mtime tick (fast spec rewrites on ext4's
+    * second-granularity mtime) still fingerprint apart unless the data is
+    * byte-identical, in which case staleness is vacuous. One listing plus
+    * at most a 4 KiB read per call, no job. Immutable fixtures
     * fingerprint identically for the whole JVM. */
   private def fp(dir: String, name: String): String = {
-    val p = Paths.get(dir, s"$name.parquet")
-    if (Files.isRegularFile(p))
-      s"${Files.size(p)}:${Files.getLastModifiedTime(p).toMillis}:" +
-        tailHash(p)
-    else if (Files.isDirectory(p)) {
-      val s = Files.list(p)
-      try {
-        var n = 0L; var bytes = 0L; var mt = 0L
-        val names = mutable.ArrayBuffer[String]()
-        s.forEach { f =>
-          if (Files.isRegularFile(f)) {
-            n += 1; bytes += Files.size(f)
-            mt = math.max(mt, Files.getLastModifiedTime(f).toMillis)
-            names += f.getFileName.toString
-          }
-        }
-        s"$n:$bytes:$mt:${md5(names.sorted.mkString("\n")
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))}"
-      } finally s.close()
-    } else "none"
+    val path = s"$dir/$name.parquet"
+    val conf = FooterBridge.hadoopConf(SparkSession.active)
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(conf)
+    val prefix = fs.makeQualified(root).toString
+    val files = Tables.dataFiles(conf, path).toSeq
+    val listing = files.map(f => s"${f.getPath.toString.stripPrefix(prefix)}" +
+      s":${f.getLen}:${f.getModificationTime}").mkString("\n")
+    files match {
+      case Seq(f) => s"$listing:${tailHash(fs, f)}"
+      case _ => md5(listing.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    }
   }
 
   /** MD5 of a file's last ≤4 KiB (the parquet footer region). */
-  private def tailHash(p: Path): String = {
-    val size = Files.size(p)
-    val buf = new Array[Byte](math.min(4096L, size).toInt)
-    val ch = Files.newByteChannel(p)
-    try {
-      ch.position(size - buf.length)
-      val bb = java.nio.ByteBuffer.wrap(buf)
-      while (bb.hasRemaining && ch.read(bb) >= 0) {}
-    } finally ch.close()
+  private def tailHash(fs: FileSystem, f: FileStatus): String = {
+    val buf = new Array[Byte](math.min(4096L, f.getLen).toInt)
+    val in = fs.open(f.getPath)
+    try in.readFully(f.getLen - buf.length, buf) finally in.close()
     md5(buf)
   }
 

@@ -1,6 +1,7 @@
 package graft
 
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -26,6 +27,13 @@ import org.apache.spark.sql.types._
   * At 100 TB the per-table parquet file becomes a partitioned directory; the
   * loader API (dir, name) stays identical — Spark's file-source handles
   * partition discovery, pruning and vectorized scan.
+  *
+  * Storage. A table path is any Hadoop path, reached through Hadoop
+  * `FileSystem` under the session's Hadoop conf. [[dataFiles]] is the
+  * engine's one file lister: footer reads, [[rowCount]] and `Staged`'s
+  * input fingerprints all take a table's files from it, and
+  * [[Pipeline]]'s layer commit stats, renames and deletes through the
+  * same API.
   */
 object Tables {
 
@@ -71,8 +79,8 @@ object Tables {
     * into partition dirs. Names starting with `_` or `.` (`_SUCCESS`,
     * `.crc` files, `_temporary`) are skipped, as Spark's file index skips
     * them. Empty if the path does not exist. */
-  private def dataFiles(conf: org.apache.hadoop.conf.Configuration,
-                        path: String): Iterator[FileStatus] = {
+  private[graft] def dataFiles(conf: org.apache.hadoop.conf.Configuration,
+                               path: String): Iterator[FileStatus] = {
     val p = new Path(path)
     val fs = p.getFileSystem(conf)
     def under(d: Path): Iterator[FileStatus] =
@@ -143,8 +151,6 @@ object Tables {
     }
   }
 
-  // --- Reference-shaped schemas (FIXTURES.md §A), used by unit tests ------
-
   /** Input bytes per spread task: the measured knee (see [[spread]]). */
   private[graft] val SpreadSliceBytes = 262144L
 
@@ -187,18 +193,21 @@ object Tables {
     * of expression-heavy work per task — keeps small tables at a
     * handful of right-sized tasks while any input past cpus×256 KiB
     * still spreads to the full width, so probe/production scans are
-    * unchanged. */
+    * unchanged. Input bytes are the `FileStatus` lengths of the input
+    * files, on whatever file system holds them. */
   def spread(df: DataFrame): DataFrame = {
     val p = df.sparkSession.sparkContext.defaultParallelism
     val files =
-      try df.inputFiles catch { case _: Throwable => Array.empty[String] }
+      try df.inputFiles catch { case NonFatal(_) => Array.empty[String] }
     if (files.length >= p) df
     else if (files.isEmpty) df.repartition(p) // width unknowable: old rule
     else {
+      val conf = FooterBridge.hadoopConf(df.sparkSession)
       val bytes = files.iterator.map { f =>
-        try java.nio.file.Files.size(
-          java.nio.file.Paths.get(new java.net.URI(f).getPath))
-        catch { case _: Exception => SpreadSliceBytes * p } // unknown: big
+        try {
+          val path = new Path(new java.net.URI(f))
+          path.getFileSystem(conf).getFileStatus(path).getLen
+        } catch { case NonFatal(_) => SpreadSliceBytes * p } // unknown: big
       }.sum
       val width = math.max(1L, math.min(p.toLong,
         (bytes + SpreadSliceBytes - 1) / SpreadSliceBytes)).toInt
@@ -207,7 +216,10 @@ object Tables {
   }
 
   /** Mirrors the World Bank API record shape (api_fetcher.py:125-130,
-    * database.py:96-102): nested country/indicator structs, year-as-string. */
+    * database.py:96-102): nested country/indicator structs, year-as-string.
+    * No engine query reads it: it is kept as the executable reference of
+    * the reference pipeline's fetched record, the schema the ingest specs
+    * parse the indicator source's JSON with (FIXTURES.md §A3). */
   val rawApiRecordSchema: StructType = StructType(Seq(
     StructField("countryiso3code", StringType),
     StructField("country", StructType(Seq(

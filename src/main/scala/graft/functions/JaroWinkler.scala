@@ -17,7 +17,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *    the equality shortcut, which would say 1.0);
   *  - match window ⌊max(|a|,|b|)/2⌋ − 1 (so two 1-char strings never
   *    match unless equal);
-  *  - transpositions = half the mismatches along the matched sequences;
+  *  - transpositions = half the mismatches along the matched sequences,
+  *    floored (integer `trans / 2`: 'abcdefgh' vs 'bcadefgh' has 3
+  *    mismatches, so 1 transposition and jaro 0.958333);
   *  - Winkler prefix boost ℓ·0.1·(1−jaro) only when jaro > 0.7, prefix
   *    capped at 4 — DuckDB applies the classic boost threshold.
   *
@@ -62,7 +64,7 @@ object JaroWinklerAlgo {
       i += 1
     }
     val m = matches.toDouble
-    val jaro = (m / n + m / m0 + (m - trans / 2.0) / m) / 3.0
+    val jaro = (m / n + m / m0 + (m - trans / 2) / m) / 3.0
     if (jaro <= 0.7) jaro
     else {
       val maxL = math.min(4, math.min(n, m0))

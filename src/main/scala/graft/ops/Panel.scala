@@ -207,8 +207,8 @@ object Panel {
     * (lag-based, like W1) and the trailing-5 revenue↔quantity
     * correlation with the reference's min-periods-3 guard (W2's rule
     * applied to a second-moment feature). Both specs share the entity
-    * partition, so Catalyst computes them in one shuffle; corr is a
-    * mergeable moment sketch — O(1) state per frame row. */
+    * partition, so Catalyst computes them in one shuffle; the correlation
+    * is built from mergeable moments — O(1) state per frame row. */
   def panelGrowth(spark: SparkSession, dir: String): DataFrame = {
     val li = Tables.t(spark, dir, "lineitem")
     val a = yearlyPanel(li, "l_suppkey", "l_shipdate",
@@ -219,13 +219,18 @@ object Panel {
         round(col("rev"), 4).as("revenue"), round(col("q"), 4).as("qty"))
     val w = Window.partitionBy(col("suppkey")).orderBy(col("year"))
     val f = w.rowsBetween(-4, 0)
-    // corr over a zero-variance frame is NaN in Spark but NULL in SQL
-    // engines (the DuckDB oracle included) — normalize with nanvl.
+    // corr over a frame where one side has zero variance divides by zero:
+    // Spark's `corr` throws [DIVIDE_BY_ZERO] under ANSI (the window runs
+    // for every row, before the count guard), DuckDB gives NULL. DuckDB's
+    // own formula, covar_pop / (stddev_pop · stddev_pop) through
+    // try_divide, gives NULL the same way.
     a.select(col("suppkey"), col("year"),
         round((col("revenue") - lag(col("revenue"), 1).over(w)) /
           lag(col("revenue"), 1).over(w) + 1e-9, 6).as("rev_growth"),
         when(count(lit(1)).over(f) >= 3,
-          round(nanvl(corr(col("revenue"), col("qty")).over(f), lit(null)) + 1e-9, 6))
+          round(try_divide(covar_pop(col("revenue"), col("qty")).over(f),
+            stddev_pop(col("revenue")).over(f) *
+              stddev_pop(col("qty")).over(f)) + 1e-9, 6))
           .as("rev_qty_corr"))
       .orderBy(col("suppkey"), col("year"))
   }

@@ -56,7 +56,7 @@ class FooterReadSpec extends AnyFunSuite {
     assert(sameAsInferred(stagedDir.head).schema === staged.schema)
 
     val parted = s"$work/parted"
-    Pipeline.writePartitioned(Tables.t(spark, sf, "orders")
+    TestFixtures.writePartitioned(Tables.t(spark, sf, "orders")
       .select(col("o_orderkey"), col("o_totalprice"),
               col("o_orderstatus")), parted, Seq("o_orderstatus"))
     val df = sameAsInferred(parted)

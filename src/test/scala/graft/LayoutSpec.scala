@@ -21,7 +21,8 @@ class LayoutSpec extends AnyFunSuite {
        "partitions at the scan") {
     val dir = TestFixtures.tempDir("graft_layout").toString
     val ev = Tables.events(spark, "/root/testdata/sf0.001")
-    Pipeline.writePartitioned(ev, s"$dir/events_by_type", Seq("event_type"))
+    TestFixtures.writePartitioned(ev, s"$dir/events_by_type",
+      Seq("event_type"))
     assert(Files.exists(Paths.get(s"$dir/events_by_type/event_type=click")))
 
     val clicks = spark.read.parquet(s"$dir/events_by_type")
@@ -40,7 +41,8 @@ class LayoutSpec extends AnyFunSuite {
     val path = s"$dir/events_part"
     val ev = Tables.events(spark, "/root/testdata/sf0.001")
     // force a fragmented layout: many tasks × every partition dir
-    Pipeline.writePartitioned(ev.repartition(8), path, Seq("event_type"))
+    TestFixtures.writePartitioned(ev.repartition(8), path,
+      Seq("event_type"))
     val before = parquetFiles(path).size
     val rowsBefore = spark.read.parquet(path).count()
 
@@ -58,7 +60,7 @@ class LayoutSpec extends AnyFunSuite {
     import spark.implicits._
     val dir = TestFixtures.tempDir("graft_layout").toString
     val ev = Tables.events(spark, "/root/testdata/sf0.001")
-    Pipeline.writePartitioned(ev, s"$dir/by_type", Seq("event_type"))
+    TestFixtures.writePartitioned(ev, s"$dir/by_type", Seq("event_type"))
     val fact = spark.read.parquet(s"$dir/by_type")
     // the fact query never names the surviving types — only the dim's
     // filter knows them, so pruning must be DYNAMIC (planned as a

@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions.lit
 import graft.ops.Panel
 
 /** Edge semantics of the window features (FIXTURES.md §A4):
@@ -91,5 +92,25 @@ class PanelSpec extends AnyFunSuite {
           s"($sk, $y): got ${v.get}, line through ($py,$pv)-($ny,$nv)")
       }
     }
+  }
+
+  test("panel_growth: a frame with zero qty variance gives NULL corr " +
+       "(DuckDB's answer), not [DIVIDE_BY_ZERO] under ANSI") {
+    // supplier 1 ships the same qty in 1995-1997 (zero variance on one
+    // side of every frame); supplier 2's qty and revenue rise together
+    val li = Seq(
+        (1L, "1995-03-01", 100.0, 10.0), (1L, "1996-03-01", 200.0, 10.0),
+        (1L, "1997-03-01", 400.0, 10.0),
+        (2L, "1995-03-01", 10.0, 1.0), (2L, "1996-03-01", 20.0, 2.0),
+        (2L, "1997-03-01", 30.0, 3.0))
+      .toDF("l_suppkey", "d", "l_extendedprice", "l_quantity")
+      .select($"l_suppkey", $"d".cast("date").as("l_shipdate"),
+              $"l_extendedprice", lit(0.0).as("l_discount"), $"l_quantity")
+    val dir = TestFixtures.writeDir(Map("lineitem" -> li))
+    val corr = Panel.panelGrowth(spark, dir).collect()
+      .map(r => (r.getLong(0), r.getLong(1)) ->
+        (if (r.isNullAt(3)) None else Some(r.getDouble(3)))).toMap
+    assert(corr((1L, 1997L)) === None)
+    assert(corr((2L, 1997L)) === Some(1.0))
   }
 }

@@ -58,6 +58,16 @@ class PipelineSpec extends AnyFunSuite {
       .head().getAs[Double]("revenue") === 123.4567)
   }
 
+  test("Pipeline.run commits every layer under a file: URI work dir, and " +
+       "a re-run converges") {
+    val work = "file://" + TestFixtures.tempDir("graft_pipe")
+    val first = Pipeline.run(spark, sf, work, ts("2026-01-01 00:00:00"))
+    val second = Pipeline.run(spark, sf, work, ts("2026-01-02 00:00:00"))
+    assert(second === first && first("cleaned") > 0)
+    for (layer <- Seq("raw_revenue", "raw_qty", "cleaned"))
+      assert(Pipeline.readCommitted(spark, s"$work/$layer").isDefined, layer)
+  }
+
   test("readCommitted sees a mid-swap crash's data WITHOUT mutating disk") {
     val work = TestFixtures.tempDir("graft_pipe").toString
     val path = s"$work/sink"
@@ -176,6 +186,23 @@ class PipelineSpec extends AnyFunSuite {
     assert(layer().count() === 3L && value() === 3L)
     assert(layers === 2 && values === 2)
     assert(!Files.exists(firstDir), "the superseded layer must be deleted")
+  }
+
+  test("Staged: rewriting a hive-partitioned table without _SUCCESS " +
+       "recomputes") {
+    val dir = TestFixtures.tempDir("graft_fixture").toString
+    def write(n: Long): Unit = {
+      TestFixtures.writePartitioned((1L to n).toDF("x")
+        .withColumn("p", $"x" % 2), s"$dir/t.parquet", Seq("p"))
+      for (f <- Seq("_SUCCESS", "._SUCCESS.crc"))
+        Files.delete(java.nio.file.Paths.get(dir, "t.parquet", f))
+    }
+    def value() = Staged.value(Staged.key("spec_partitioned", dir, "t"))(
+      spark.read.parquet(s"$dir/t.parquet").count())
+    write(10)
+    assert(value() === 10L)
+    write(20)
+    assert(value() === 20L)
   }
 
   test("Staged: keys that differ only in a param do not evict each other") {

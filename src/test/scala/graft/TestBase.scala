@@ -53,6 +53,13 @@ object TestFixtures {
     dir
   }
 
+  /** Write `df` hive-style partitioned: one directory per distinct value
+    * of `parts`, the layout whose equality predicates on a key prune
+    * whole directories and which `Pipeline.compact` rewrites. */
+  def writePartitioned(df: DataFrame, path: String,
+                       parts: Seq[String]): Unit =
+    df.write.mode("overwrite").partitionBy(parts: _*).parquet(path)
+
   /** Replace `dir/name.parquet` in place with `df` written as ONE parquet
     * file — the single-file layout of the driver fixtures, so a stream's
     * staged symlink keeps pointing at the table. */

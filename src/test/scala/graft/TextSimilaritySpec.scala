@@ -459,6 +459,9 @@ class TextSimilaritySpec extends AnyFunSuite {
     assert(jw("martha", "marhta") === 0.9611111111111111)
     assert(jw("dwayne", "duane") === 0.8400000000000001)
     assert(jw("DIXON", "DICKSONX") === 0.8133333333333332)
+    // 3 mismatches along the matched sequences floor to 1 transposition,
+    // as DuckDB counts them (jaro_similarity gives 0.958333)
+    assert(jw("abcdefgh", "bcadefgh") === 0.9583333333333334)
     // boost threshold: jaro 2/3 < 0.7 → NO prefix boost
     assert(jw("ab", "ax") === 0.6666666666666666)
     // prefix capped at 4 even though 7 chars match
