@@ -122,14 +122,25 @@ object Pipeline {
   }
 
   /** Read a layer whose batches were written under EVOLVING schemas
-    * (a later generation added columns): mergeSchema unions the parquet
-    * footers, older rows surface the new columns as nulls. This is the
-    * read-side half of schema evolution; the write side needs no help —
-    * parquet batch writes are self-describing. Merging pays a per-file
-    * footer read at planning time, so at 100 TB pin the merged schema in
-    * a table catalog once evolution settles (same note as the swap-in). */
-  def readEvolved(spark: SparkSession, paths: String*): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(paths: _*)
+    * (a later generation added columns): the schema is the union of every
+    * data file's footer schema, merged by the rule Spark's schema merging
+    * applies (`StructType.merge`), and older rows surface the new columns
+    * as nulls. The footers are read in parallel on the driver, so no
+    * schema-inference job runs; a path set with no data file goes to
+    * Spark's own reader and fails with its error. This is the read-side
+    * half of schema evolution; the write side needs no help — parquet
+    * batch writes are self-describing. Merging pays a per-file footer
+    * read at planning time, so at 100 TB pin the merged schema in a table
+    * catalog once evolution settles (same note as the swap-in). */
+  def readEvolved(spark: SparkSession, paths: String*): DataFrame = {
+    val conf = FooterBridge.hadoopConf(spark)
+    val footers = FooterBridge.footers(conf,
+      paths.flatMap(Tables.dataFiles(conf, _)))
+    FooterBridge.schema(spark, footers) match {
+      case Some(s) => spark.read.schema(s).parquet(paths: _*)
+      case None => spark.read.parquet(paths: _*)
+    }
+  }
 
   /** K2: keyed batch upsert into a raw layer path (ON CONFLICT DO UPDATE
     * semantics — database.py:119-138). Returns the committed layer's row

@@ -25,7 +25,11 @@ object SparkEntry {
       graft.streaming.StreamingBatch.queries
 
   /** For each key in `queries`, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. */
+    * the same parquet tables. For the queries written as SQL text, both
+    * engines run the same text: the query binds it to the fixture tables
+    * with `Tables.sql`, and its oracle entry is that string (only
+    * `sql_text`, whose `shingles` function DuckDB lacks, keeps a DuckDB
+    * emulation of its own). */
   def oracleSql: Map[String, String] =
     Panel.oracle ++ Relational.oracle ++ Ingest.oracle ++
       Events.oracle ++ Text.oracle ++ Dedup.oracle ++

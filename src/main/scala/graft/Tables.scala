@@ -1,12 +1,18 @@
 package graft
 
+import java.util.Locale
+
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan,
+  SubqueryAlias, UnresolvedWith}
 import org.apache.spark.sql.execution.datasources.parquet.FooterBridge
 import org.apache.spark.sql.functions.{col, expr}
+import org.apache.spark.sql.graft.DatasetBridge
 import org.apache.spark.sql.types._
 
 /** Fixture-table loaders + explicit schemas.
@@ -19,10 +25,11 @@ import org.apache.spark.sql.types._
   * what inference would give — and hands it to the reader. No
   * schema-inference job runs, and nothing is cached: a rewritten table is
   * read as it is now. A committed layer's row count comes from its
-  * footers the same way ([[rowCount]]). Two sites still infer:
-  * `Pipeline.readEvolved` (mergeSchema needs every footer) and the
-  * SQL-text queries built with [[sqlWith]] (a SQL `parquet.<path>`
-  * relation takes no schema).
+  * footers the same way ([[rowCount]]), and `Pipeline.readEvolved` merges
+  * every footer's schema. A SQL text gets its tables from [[sql]]: each
+  * table name in it is bound to [[t]]'s plan, so SQL reads the tables
+  * exactly as the DataFrame queries do. Nothing in the engine infers a
+  * schema.
   *
   * At 100 TB the per-table parquet file becomes a partitioned directory; the
   * loader API (dir, name) stays identical — Spark's file-source handles
@@ -96,19 +103,31 @@ object Tables {
     } catch { case _: java.io.FileNotFoundException => Iterator.empty }
   }
 
-  /** WITH-clause entries for SQL-text queries, one per table: `name AS
-    * (SELECT * FROM parquet.<path>)`, where <path> is `<dir>/<name>.parquet`
-    * quoted as an identifier (backticks in it doubled). The statement
-    * names its tables itself, so building it registers no session-global
-    * view and cannot shadow, or be shadowed by, a caller's table of the
-    * same name. Reads exactly what [[t]] reads, except for `events`, whose
-    * ts needs [[events]]' conversion. */
-  def sqlWith(dir: String, names: String*): String =
-    names.map { n =>
-      require(n != "events", "events needs Tables.events' ts conversion")
-      val path = s"$dir/$n.parquet".replace("`", "``")
-      s"$n AS (SELECT * FROM parquet.`$path`)"
-    }.mkString(",\n")
+  /** A SQL text over the fixture tables of `dir`, bound without a view or
+    * a path relation: the text is parsed by the session's parser, and
+    * every one-part table name in it that is one of [[names]] (in any
+    * case) becomes a subquery alias over [[t]]'s plan for that table —
+    * in the main query, in subquery expressions and in CTE bodies alike.
+    * So each table is read with its footer schema ([[read]]), `events`
+    * with its ts conversion, no schema-inference job runs, and building
+    * the query registers nothing in the session and cannot be shadowed by
+    * a caller's table of the same name. A CTE may not take a table's
+    * name: its references would be bound to the table. */
+  def sql(spark: SparkSession, dir: String, text: String): DataFrame = {
+    def table(n: String) = names.contains(n.toLowerCase(Locale.ROOT))
+    def bind(plan: LogicalPlan): LogicalPlan =
+      plan.transformUpWithSubqueries {
+        case UnresolvedRelation(Seq(n), _, _) if table(n) =>
+          SubqueryAlias(n,
+            t(spark, dir, n.toLowerCase(Locale.ROOT)).queryExecution.logical)
+        case w: UnresolvedWith =>
+          w.copy(cteRelations = w.cteRelations.map { case (n, body, d) =>
+            require(!table(n), s"CTE $n shadows the table of that name")
+            (n, body.copy(child = bind(body.child)), d)
+          })
+      }
+    DatasetBridge.ofRows(spark, bind(DatasetBridge.parse(spark, text)))
+  }
 
   /** Parquet-footer row count, computed once per table content
     * ([[Staged]]). A bare `t(...).count()` is footer-only (no data scan)

@@ -322,9 +322,8 @@ object Relational {
     * the session) — identical Catalyst plans to the DataFrame API. */
   def sqlText(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
-    spark.sql(
-      s"""WITH ${Tables.sqlWith(dir, "lineitem", "documents")}
-        |SELECT l.l_returnflag,
+    Tables.sql(spark, dir,
+      """SELECT l.l_returnflag,
         |       ROUND(SUM(l.l_quantity), 4) AS sum_qty,
         |       COUNT(*) AS n_rows,
         |       (SELECT CAST(SUM(size(shingles(text))) AS BIGINT)
@@ -334,25 +333,25 @@ object Relational {
         |ORDER BY l.l_returnflag""".stripMargin)
   }
 
+  private val sqlLateralSql =
+    """SELECT c.c_custkey, o.o_orderkey, o.o_totalprice
+      |FROM customer c,
+      |LATERAL (
+      |  SELECT o_orderkey, o_totalprice FROM orders
+      |  WHERE o_custkey = c.c_custkey
+      |  ORDER BY o_totalprice DESC, o_orderkey
+      |  LIMIT 2) o
+      |ORDER BY c.c_custkey, o.o_totalprice DESC, o.o_orderkey"""
+      .stripMargin
+
   /** Correlated LATERAL join: per customer, the 2 highest-value orders —
     * the top-N-per-key shape written the way an analyst writes it.
     * Catalyst decorrelates the LIMITed lateral subquery into a
     * window-rank filter (no per-row subquery execution survives in the
     * physical plan), so it scales exactly like the explicit
     * window-rank form in `windowRank`. */
-  def sqlLateral(spark: SparkSession, dir: String): DataFrame = {
-    spark.sql(
-      s"""WITH ${Tables.sqlWith(dir, "customer", "orders")}
-        |SELECT c.c_custkey, o.o_orderkey, o.o_totalprice
-        |FROM customer c,
-        |LATERAL (
-        |  SELECT o_orderkey, o_totalprice FROM orders
-        |  WHERE o_custkey = c.c_custkey
-        |  ORDER BY o_totalprice DESC, o_orderkey
-        |  LIMIT 2) o
-        |ORDER BY c.c_custkey, o.o_totalprice DESC, o.o_orderkey"""
-        .stripMargin)
-  }
+  def sqlLateral(spark: SparkSession, dir: String): DataFrame =
+    Tables.sql(spark, dir, sqlLateralSql)
 
   /** Full CUBE over (returnflag, linestatus) with an explicit grouping id
     * — completes the grouping-sets family next to rollup_revenue. Cube is
@@ -461,19 +460,18 @@ object Relational {
           .as("covar_qp"))
       .orderBy(col("l_returnflag"))
 
+  private val sqlCorrelatedSql =
+    """SELECT o_orderkey, o_custkey, o_totalprice FROM orders o
+      |WHERE o_totalprice > 2 * (SELECT AVG(o2.o_totalprice) FROM orders o2
+      |                          WHERE o2.o_custkey = o.o_custkey)
+      |ORDER BY o_orderkey""".stripMargin
+
   /** Correlated scalar subquery through the SQL front: orders more than
     * twice their customer's average — Catalyst DECORRELATES this into an
     * aggregate + join (no per-row subquery execution), the optimizer
     * behavior that makes correlated SQL usable at scale. */
-  def sqlCorrelated(spark: SparkSession, dir: String): DataFrame = {
-    spark.sql(
-      s"""WITH ${Tables.sqlWith(dir, "orders")}
-        |SELECT o_orderkey, o_custkey, o_totalprice FROM orders o
-        |WHERE o_totalprice > 2 * (SELECT AVG(o2.o_totalprice)
-        |                          FROM orders o2
-        |                          WHERE o2.o_custkey = o.o_custkey)
-        |ORDER BY o_orderkey""".stripMargin)
-  }
+  def sqlCorrelated(spark: SparkSession, dir: String): DataFrame =
+    Tables.sql(spark, dir, sqlCorrelatedSql)
 
   /** TPC-H q14-shape conditional aggregation: monthly PROMO revenue share
     * — the CASE-WHEN-inside-SUM pattern (a.k.a. filtered aggregation).
@@ -720,6 +718,28 @@ object Relational {
       .orderBy(col("p_brand"))
   }
 
+  private val q21WaitingSql =
+    """WITH lf AS (
+      |  SELECT l_orderkey, l_suppkey,
+      |         l_shipdate > o_orderdate + INTERVAL 90 DAY AS late
+      |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+      |  WHERE o_orderstatus = 'F')
+      |SELECT s_name, n_name, COUNT(*) AS numwait
+      |FROM lf l1
+      |  JOIN supplier ON l1.l_suppkey = s_suppkey
+      |  JOIN nation ON s_nationkey = n_nationkey
+      |WHERE l1.late
+      |  AND EXISTS (SELECT 1 FROM lf l2
+      |              WHERE l2.l_orderkey = l1.l_orderkey
+      |                AND l2.l_suppkey <> l1.l_suppkey)
+      |  AND NOT EXISTS (SELECT 1 FROM lf l3
+      |                  WHERE l3.l_orderkey = l1.l_orderkey
+      |                    AND l3.l_suppkey <> l1.l_suppkey
+      |                    AND l3.late)
+      |GROUP BY s_name, n_name
+      |ORDER BY numwait DESC, s_name
+      |LIMIT 100""".stripMargin
+
   /** TPC-H Q21-shape: suppliers who single-handedly kept multi-supplier
     * 'F' orders waiting — the notorious EXISTS + NOT-EXISTS
     * double-correlated self-join on lineitem, the hardest decorrelation
@@ -739,31 +759,8 @@ object Relational {
     * (per-order distinct-supplier counts: qualifies ⇔ late ∧ n_supp ≥ 2
     * ∧ n_late_supp = 1), the single-shuffle form a 100 TB deployment
     * would hand-write if the planner ever regressed. */
-  def q21Waiting(spark: SparkSession, dir: String): DataFrame = {
-    spark.sql(
-      s"""WITH ${Tables.sqlWith(dir, "lineitem", "orders", "supplier",
-                                 "nation")},
-        |lf AS (
-        |  SELECT l_orderkey, l_suppkey,
-        |         l_shipdate > o_orderdate + INTERVAL 90 DAY AS late
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |  WHERE o_orderstatus = 'F')
-        |SELECT s_name, n_name, COUNT(*) AS numwait
-        |FROM lf l1
-        |  JOIN supplier ON l1.l_suppkey = s_suppkey
-        |  JOIN nation ON s_nationkey = n_nationkey
-        |WHERE l1.late
-        |  AND EXISTS (SELECT 1 FROM lf l2
-        |              WHERE l2.l_orderkey = l1.l_orderkey
-        |                AND l2.l_suppkey <> l1.l_suppkey)
-        |  AND NOT EXISTS (SELECT 1 FROM lf l3
-        |                  WHERE l3.l_orderkey = l1.l_orderkey
-        |                    AND l3.l_suppkey <> l1.l_suppkey
-        |                    AND l3.late)
-        |GROUP BY s_name, n_name
-        |ORDER BY numwait DESC, s_name
-        |LIMIT 100""".stripMargin)
-  }
+  def q21Waiting(spark: SparkSession, dir: String): DataFrame =
+    Tables.sql(spark, dir, q21WaitingSql)
 
   /** The one-aggregate rewrite of q21Waiting's qualification rule, used
     * by ExtendedOpsSpec to prove the decorrelated SQL form computes the
@@ -798,6 +795,32 @@ object Relational {
       .limit(100)
   }
 
+  private val q2MinCostSql =
+    """WITH ps AS (
+      |  SELECT l_partkey AS pk, l_suppkey AS sk,
+      |         MIN(CAST(ROUND(l_extendedprice * 100) AS BIGINT))
+      |           AS cost_c
+      |  FROM lineitem GROUP BY l_partkey, l_suppkey)
+      |SELECT s_acctbal, s_name, n_name, p_partkey, p_type,
+      |       CAST(ROUND(cost_c / 100.0, 2) AS DOUBLE) AS supply_cost
+      |FROM part
+      |  JOIN ps ON pk = p_partkey
+      |  JOIN supplier ON sk = s_suppkey
+      |  JOIN nation ON s_nationkey = n_nationkey
+      |  JOIN region ON n_regionkey = r_regionkey
+      |WHERE r_name = 'EUROPE' AND p_type = 'STANDARD'
+      |  AND cost_c = (SELECT MIN(ps2.cost_c)
+      |                FROM ps ps2
+      |                  JOIN supplier s2 ON ps2.sk = s2.s_suppkey
+      |                  JOIN nation n2
+      |                    ON s2.s_nationkey = n2.n_nationkey
+      |                  JOIN region r2
+      |                    ON n2.n_regionkey = r2.r_regionkey
+      |                WHERE r2.r_name = 'EUROPE'
+      |                  AND ps2.pk = p_partkey)
+      |ORDER BY s_acctbal DESC, n_name, s_name, p_partkey
+      |LIMIT 100""".stripMargin
+
   /** TPC-H Q2-shape: minimum-cost supplier per part across the
     * part→supplier→nation→region dimension chain — the correlated-MIN
     * scalar subquery whose decorrelation (a per-part MIN aggregate
@@ -809,35 +832,8 @@ object Relational {
     * (a float min could disagree on a ulp and flip membership).
     * Dimensions broadcast; the only shuffles are the ps aggregate and
     * its per-part MIN twin. */
-  def q2MinCost(spark: SparkSession, dir: String): DataFrame = {
-    spark.sql(
-      s"""WITH ${Tables.sqlWith(dir, "lineitem", "part", "supplier",
-                                 "nation", "region")},
-        |ps AS (
-        |  SELECT l_partkey AS pk, l_suppkey AS sk,
-        |         MIN(CAST(ROUND(l_extendedprice * 100) AS BIGINT))
-        |           AS cost_c
-        |  FROM lineitem GROUP BY l_partkey, l_suppkey)
-        |SELECT s_acctbal, s_name, n_name, p_partkey, p_type,
-        |       CAST(ROUND(cost_c / 100.0, 2) AS DOUBLE) AS supply_cost
-        |FROM part
-        |  JOIN ps ON pk = p_partkey
-        |  JOIN supplier ON sk = s_suppkey
-        |  JOIN nation ON s_nationkey = n_nationkey
-        |  JOIN region ON n_regionkey = r_regionkey
-        |WHERE r_name = 'EUROPE' AND p_type = 'STANDARD'
-        |  AND cost_c = (SELECT MIN(ps2.cost_c)
-        |                FROM ps ps2
-        |                  JOIN supplier s2 ON ps2.sk = s2.s_suppkey
-        |                  JOIN nation n2
-        |                    ON s2.s_nationkey = n2.n_nationkey
-        |                  JOIN region r2
-        |                    ON n2.n_regionkey = r2.r_regionkey
-        |                WHERE r2.r_name = 'EUROPE'
-        |                  AND ps2.pk = p_partkey)
-        |ORDER BY s_acctbal DESC, n_name, s_name, p_partkey
-        |LIMIT 100""".stripMargin)
-  }
+  def q2MinCost(spark: SparkSession, dir: String): DataFrame =
+    Tables.sql(spark, dir, q2MinCostSql)
 
   /** TPC-H Q14-shape promo revenue share per 1997 ship month — the
     * conditional-ratio-over-broadcast-join planner shape: one fact scan,
@@ -1298,12 +1294,34 @@ object Relational {
       .orderBy(col("day"))
   }
 
+  private val sqlRecursiveSql =
+    """WITH RECURSIVE bounds AS (
+      |  SELECT year(MIN(o_orderdate)) AS y0, year(MAX(o_orderdate)) AS y1
+      |  FROM orders),
+      |years(y, y1) AS (
+      |  SELECT y0, y1 FROM bounds
+      |  UNION ALL
+      |  SELECT y + 1, y1 FROM years WHERE y < y1
+      |),
+      |g AS (
+      |  SELECT year(o_orderdate) AS y, COUNT(*) AS n,
+      |         ROUND(SUM(o_totalprice), 4) AS revenue
+      |  FROM orders GROUP BY 1)
+      |SELECT CAST(years.y AS BIGINT) AS year,
+      |       CAST(COALESCE(g.n, 0) AS BIGINT) AS n_orders,
+      |       COALESCE(g.revenue, 0.0) AS revenue
+      |FROM years LEFT JOIN g ON years.y = g.y
+      |ORDER BY year""".stripMargin
+
   /** Recursive CTE through the SQL front (WITH RECURSIVE, new in Spark
     * 4): a year spine generated inductively, left-joined to yearly order
-    * totals — zero-filling any silent years. Bounds are collected once
-    * and inlined as literals: a correlated MAX() in the recursion guard
-    * re-scans the fact table EVERY level (measured 22 s vs 5 s for an
-    * 80-level month spine at sf0.1).
+    * totals — zero-filling any silent years. The bounds come from one
+    * aggregate and the upper one rides along the spine as a column: a
+    * scalar MAX() subquery in the recursion guard re-scans the fact table
+    * EVERY level (measured warm at sf0.1 on 4 cores, 7-level spine:
+    * 2.35 s against 0.55 s for this form; 22 s vs 5 s for an 80-level
+    * month spine), and bounds collected on the driver (0.45 s) run a job
+    * while the DataFrame is built.
     *
     * Scale stance, measured: Spark executes recursion level-by-level —
     * one job per level — so recursion depth is a DRIVER cost, not a data
@@ -1311,27 +1329,8 @@ object Relational {
     * to `sequence()` (panel_fill's shape). Recursion earns its place for
     * genuinely inductive queries, and this query pins the feature
     * working end to end against the same SQL in DuckDB. */
-  def sqlRecursive(spark: SparkSession, dir: String): DataFrame = {
-    val Array(y0, y1) = Tables.t(spark, dir, "orders")
-      .agg(min(year(col("o_orderdate"))), max(year(col("o_orderdate"))))
-      .head().toSeq.map(_.asInstanceOf[Int]).toArray
-    spark.sql(
-      s"""WITH RECURSIVE ${Tables.sqlWith(dir, "orders")},
-         |years(y) AS (
-         |  SELECT $y0
-         |  UNION ALL
-         |  SELECT y + 1 FROM years WHERE y < $y1
-         |),
-         |g AS (
-         |  SELECT year(o_orderdate) AS y, COUNT(*) AS n,
-         |         ROUND(SUM(o_totalprice), 4) AS revenue
-         |  FROM orders GROUP BY 1)
-         |SELECT CAST(years.y AS BIGINT) AS year,
-         |       CAST(COALESCE(g.n, 0) AS BIGINT) AS n_orders,
-         |       COALESCE(g.revenue, 0.0) AS revenue
-         |FROM years LEFT JOIN g ON years.y = g.y
-         |ORDER BY year""".stripMargin)
-  }
+  def sqlRecursive(spark: SparkSession, dir: String): DataFrame =
+    Tables.sql(spark, dir, sqlRecursiveSql)
 
   /** Cohort lifetime-value curves: customers grouped by first-order
     * year, revenue tracked by cohort age (order year − cohort year),
@@ -1376,6 +1375,18 @@ object Relational {
       .orderBy(col("n_customers").desc, col("n_orders").desc)
   }
 
+  private val q22IdleRichSql =
+    """SELECT c_mktsegment, COUNT(*) AS n_cust,
+      |       ROUND(SUM(c_acctbal), 4) AS total_bal
+      |FROM customer c
+      |WHERE c_acctbal > (SELECT ROUND(AVG(c_acctbal) + 1e-9, 4)
+      |                   FROM customer WHERE c_acctbal > 0)
+      |  AND NOT EXISTS (SELECT 1 FROM orders o
+      |                  WHERE o.o_custkey = c.c_custkey
+      |                    AND o.o_orderdate >= TIMESTAMP '2001-01-01')
+      |GROUP BY c_mktsegment
+      |ORDER BY c_mktsegment""".stripMargin
+
   /** TPC-H q22-shape: above-average-balance customers with no RECENT
     * orders (the "idle rich" churn report; every fixture customer has
     * SOME order, so idleness is recency-scoped) — a scalar aggregate
@@ -1385,20 +1396,8 @@ object Relational {
     * exactly on it would flip membership. Catalyst plans the scalar
     * subquery once (broadcast literal) and the NOT EXISTS as an anti
     * hash join — no per-row subqueries. */
-  def q22IdleRich(spark: SparkSession, dir: String): DataFrame = {
-    spark.sql(
-      s"""WITH ${Tables.sqlWith(dir, "customer", "orders")}
-        |SELECT c_mktsegment, COUNT(*) AS n_cust,
-        |       ROUND(SUM(c_acctbal), 4) AS total_bal
-        |FROM customer c
-        |WHERE c_acctbal > (SELECT ROUND(AVG(c_acctbal) + 1e-9, 4)
-        |                   FROM customer WHERE c_acctbal > 0)
-        |  AND NOT EXISTS (SELECT 1 FROM orders o
-        |                  WHERE o.o_custkey = c.c_custkey
-        |                    AND o.o_orderdate >= TIMESTAMP '2001-01-01')
-        |GROUP BY c_mktsegment
-        |ORDER BY c_mktsegment""".stripMargin)
-  }
+  def q22IdleRich(spark: SparkSession, dir: String): DataFrame =
+    Tables.sql(spark, dir, q22IdleRichSql)
 
   def sqlHaving(spark: SparkSession, dir: String): DataFrame = {
     // Filter on the RAW sum (like the oracle's HAVING), round only for
@@ -1442,28 +1441,28 @@ object Relational {
            count(lit(1)).as("n_lines"))
   }
 
+  private val sqlExistsSql =
+    """SELECT c_mktsegment,
+      |  SUM(CASE WHEN EXISTS (SELECT 1 FROM orders o
+      |                        WHERE o.o_custkey = c.c_custkey
+      |                          AND o.o_orderstatus = 'P')
+      |      THEN 1 ELSE 0 END)::BIGINT AS n_pending,
+      |  SUM(CASE WHEN c_acctbal > 0 AND NOT EXISTS (
+      |        SELECT 1 FROM orders o
+      |        WHERE o.o_custkey = c.c_custkey
+      |          AND o.o_orderpriority = '1-URGENT')
+      |      THEN 1 ELSE 0 END)::BIGINT AS n_no_urgent
+      |FROM customer c
+      |GROUP BY c_mktsegment
+      |ORDER BY c_mktsegment""".stripMargin
+
   /** EXISTS / NOT EXISTS through the SQL front: per-segment counts of
     * customers with a pending ('P') order and of positive-balance
     * customers with no URGENT order. Catalyst rewrites both into
     * semi/anti hash joins (no per-row subquery execution) — the
     * companion to joinSemiAnti's DataFrame formulation. */
-  def sqlExists(spark: SparkSession, dir: String): DataFrame = {
-    spark.sql(
-      s"""WITH ${Tables.sqlWith(dir, "orders", "customer")}
-        |SELECT c_mktsegment,
-        |  SUM(CASE WHEN EXISTS (SELECT 1 FROM orders o
-        |                        WHERE o.o_custkey = c.c_custkey
-        |                          AND o.o_orderstatus = 'P')
-        |      THEN 1 ELSE 0 END) AS n_pending,
-        |  SUM(CASE WHEN c_acctbal > 0 AND NOT EXISTS (
-        |        SELECT 1 FROM orders o
-        |        WHERE o.o_custkey = c.c_custkey
-        |          AND o.o_orderpriority = '1-URGENT')
-        |      THEN 1 ELSE 0 END) AS n_no_urgent
-        |FROM customer c
-        |GROUP BY c_mktsegment
-        |ORDER BY c_mktsegment""".stripMargin)
-  }
+  def sqlExists(spark: SparkSession, dir: String): DataFrame =
+    Tables.sql(spark, dir, sqlExistsSql)
 
   /** Distribution windows: cume_dist, nth_value and full-frame
     * first/last — completes the ranking-window family (windowRank) with
@@ -1813,52 +1812,8 @@ object Relational {
       " * (100 - CAST(ROUND(l_discount*100) AS BIGINT))"
 
   val oracle: Map[String, String] = Map(
-    "q21_waiting" ->
-      """WITH lf AS (
-        |  SELECT l_orderkey, l_suppkey,
-        |         l_shipdate > o_orderdate + INTERVAL 90 DAY AS late
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |  WHERE o_orderstatus = 'F')
-        |SELECT s_name, n_name, COUNT(*) AS numwait
-        |FROM lf l1
-        |  JOIN supplier ON l1.l_suppkey = s_suppkey
-        |  JOIN nation ON s_nationkey = n_nationkey
-        |WHERE l1.late
-        |  AND EXISTS (SELECT 1 FROM lf l2
-        |              WHERE l2.l_orderkey = l1.l_orderkey
-        |                AND l2.l_suppkey <> l1.l_suppkey)
-        |  AND NOT EXISTS (SELECT 1 FROM lf l3
-        |                  WHERE l3.l_orderkey = l1.l_orderkey
-        |                    AND l3.l_suppkey <> l1.l_suppkey
-        |                    AND l3.late)
-        |GROUP BY s_name, n_name
-        |ORDER BY numwait DESC, s_name
-        |LIMIT 100""".stripMargin,
-    "q2_mincost" ->
-      """WITH ps AS (
-        |  SELECT l_partkey AS pk, l_suppkey AS sk,
-        |         MIN(CAST(ROUND(l_extendedprice * 100) AS BIGINT))
-        |           AS cost_c
-        |  FROM lineitem GROUP BY l_partkey, l_suppkey)
-        |SELECT s_acctbal, s_name, n_name, p_partkey, p_type,
-        |       CAST(ROUND(cost_c / 100.0, 2) AS DOUBLE) AS supply_cost
-        |FROM part
-        |  JOIN ps ON pk = p_partkey
-        |  JOIN supplier ON sk = s_suppkey
-        |  JOIN nation ON s_nationkey = n_nationkey
-        |  JOIN region ON n_regionkey = r_regionkey
-        |WHERE r_name = 'EUROPE' AND p_type = 'STANDARD'
-        |  AND cost_c = (SELECT MIN(ps2.cost_c)
-        |                FROM ps ps2
-        |                  JOIN supplier s2 ON ps2.sk = s2.s_suppkey
-        |                  JOIN nation n2
-        |                    ON s2.s_nationkey = n2.n_nationkey
-        |                  JOIN region r2
-        |                    ON n2.n_regionkey = r2.r_regionkey
-        |                WHERE r2.r_name = 'EUROPE'
-        |                  AND ps2.pk = p_partkey)
-        |ORDER BY s_acctbal DESC, n_name, s_name, p_partkey
-        |LIMIT 100""".stripMargin,
+    "q21_waiting" -> q21WaitingSql,
+    "q2_mincost" -> q2MinCostSql,
     // Direct full-table aggregation: equality with the Spark side's
     // split-then-merge proves the partial-merge algebra is lossless.
     "agg_merge" ->
@@ -1932,17 +1887,7 @@ object Relational {
         |SELECT n_orders, COUNT(*) AS n_customers
         |FROM pc GROUP BY 1
         |ORDER BY n_customers DESC, n_orders DESC""".stripMargin,
-    "q22_idle_rich" ->
-      """SELECT c_mktsegment, COUNT(*) AS n_cust,
-        |       ROUND(SUM(c_acctbal), 4) AS total_bal
-        |FROM customer c
-        |WHERE c_acctbal > (SELECT ROUND(AVG(c_acctbal) + 1e-9, 4)
-        |                   FROM customer WHERE c_acctbal > 0)
-        |  AND NOT EXISTS (SELECT 1 FROM orders o
-        |                  WHERE o.o_custkey = c.c_custkey
-        |                    AND o.o_orderdate >= TIMESTAMP '2001-01-01')
-        |GROUP BY c_mktsegment
-        |ORDER BY c_mktsegment""".stripMargin,
+    "q22_idle_rich" -> q22IdleRichSql,
     "cohort_ltv" ->
       """WITH o AS (
         |  SELECT o_custkey, year(o_orderdate) AS y, o_totalprice
@@ -1961,22 +1906,7 @@ object Relational {
         |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
         |        + 1e-9, 4) AS cum_revenue
         |FROM cells ORDER BY cohort_year, age""".stripMargin,
-    "sql_recursive" ->
-      """WITH RECURSIVE years(y) AS (
-        |  SELECT year(MIN(o_orderdate)) FROM orders
-        |  UNION ALL
-        |  SELECT y + 1 FROM years
-        |  WHERE y < (SELECT year(MAX(o_orderdate)) FROM orders)
-        |),
-        |g AS (
-        |  SELECT year(o_orderdate) AS y, COUNT(*) AS n,
-        |         ROUND(SUM(o_totalprice), 4) AS revenue
-        |  FROM orders GROUP BY 1)
-        |SELECT CAST(years.y AS BIGINT) AS year,
-        |       CAST(COALESCE(g.n, 0) AS BIGINT) AS n_orders,
-        |       COALESCE(g.revenue, 0.0) AS revenue
-        |FROM years LEFT JOIN g ON years.y = g.y
-        |ORDER BY year""".stripMargin,
+    "sql_recursive" -> sqlRecursiveSql,
     "orders_open" ->
       """WITH f AS (
         |  SELECT l_orderkey, MAX(l_shipdate) AS ship_end
@@ -2195,25 +2125,8 @@ object Relational {
         |       AND l_quantity BETWEEN 10 AND 35)
         |   OR (p_brand = 'Brand#19' AND p_size BETWEEN 20 AND 50
         |       AND l_quantity BETWEEN 20 AND 50)""".stripMargin,
-    "sql_exists" ->
-      """SELECT c_mktsegment,
-        |  SUM(CASE WHEN EXISTS (SELECT 1 FROM orders o
-        |                        WHERE o.o_custkey = c.c_custkey
-        |                          AND o.o_orderstatus = 'P')
-        |      THEN 1 ELSE 0 END)::BIGINT AS n_pending,
-        |  SUM(CASE WHEN c_acctbal > 0 AND NOT EXISTS (
-        |        SELECT 1 FROM orders o
-        |        WHERE o.o_custkey = c.c_custkey
-        |          AND o.o_orderpriority = '1-URGENT')
-        |      THEN 1 ELSE 0 END)::BIGINT AS n_no_urgent
-        |FROM customer c
-        |GROUP BY c_mktsegment
-        |ORDER BY c_mktsegment""".stripMargin,
-    "sql_correlated" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders o
-        |WHERE o_totalprice > 2 * (SELECT AVG(o2.o_totalprice) FROM orders o2
-        |                          WHERE o2.o_custkey = o.o_custkey)
-        |ORDER BY o_orderkey""".stripMargin,
+    "sql_exists" -> sqlExistsSql,
+    "sql_correlated" -> sqlCorrelatedSql,
     "stats_agg" ->
       """SELECT l_returnflag,
         |  ROUND(stddev_samp(l_quantity) + 1e-9, 4) AS sd_qty,
@@ -2229,16 +2142,7 @@ object Relational {
         |FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)
         |ORDER BY gid, l_returnflag NULLS FIRST,
         |         l_linestatus NULLS FIRST""".stripMargin,
-    "sql_lateral" ->
-      """SELECT c.c_custkey, o.o_orderkey, o.o_totalprice
-        |FROM customer c,
-        |LATERAL (
-        |  SELECT o_orderkey, o_totalprice FROM orders
-        |  WHERE o_custkey = c.c_custkey
-        |  ORDER BY o_totalprice DESC, o_orderkey
-        |  LIMIT 2) o
-        |ORDER BY c.c_custkey, o.o_totalprice DESC, o.o_orderkey"""
-        .stripMargin,
+    "sql_lateral" -> sqlLateralSql,
     "grouping_sets" ->
       """SELECT l_returnflag, l_linestatus,
         |  CAST(GROUPING(l_returnflag, l_linestatus) AS INT) AS gid,

@@ -114,7 +114,13 @@ class PipelineSpec extends AnyFunSuite {
     Seq((1L, "a")).toDF("id", "x").write.mode("overwrite").parquet(g1)
     Seq((2L, "b", 9.5)).toDF("id", "x", "score")
       .write.mode("overwrite").parquet(g2)
-    val merged = Pipeline.readEvolved(spark, g1, g2)
+    // the merged schema comes from the footers on the driver: no job,
+    // and the schema Spark's mergeSchema inference gives
+    val (merged, jobs) =
+      Jobs.during(spark)(Pipeline.readEvolved(spark, g1, g2))
+    assert(jobs.isEmpty, s"reading an evolved layer started jobs: $jobs")
+    assert(merged.schema === spark.read.option("mergeSchema", "true")
+      .parquet(g1, g2).schema)
     assert(merged.columns.toSet === Set("id", "x", "score"))
     val byId = merged.collect().map(r => r.getLong(0) ->
       (if (r.isNullAt(2)) None else Some(r.getDouble(2)))).toMap
