@@ -11,11 +11,12 @@ import org.apache.spark.sql.SparkSession
   * set, with artifact isolation off so streaming runs share it).
   *
   * The harness mains (Verify/Bench) build their sessions THROUGH this
-  * factory, so it is the single source of truth for engine session
-  * settings (TestSpark mirrors it minus the static extensions conf,
-  * which cannot apply to the shared test-JVM session). The codegen cache
-  * size is fixed when the JVM first generates code and artifact isolation
-  * when a session is created, so both are set here, not by `conf.set`.
+  * factory. Every setting but the extensions lives in one list,
+  * [[settings]], which the shared spec session applies too, so specs run
+  * the engine's file system and caches. The codegen cache size is fixed
+  * when the JVM first generates code, artifact isolation when a session
+  * is created and the file system classes when Hadoop first caches a
+  * `file:` file system, so all are set here, not by `conf.set`.
   */
 object GraftSession {
 
@@ -34,6 +35,44 @@ object GraftSession {
     * cap sits at twice the measured working set. */
   val CodegenCacheEntries = 8192
 
+  /** The engine's session settings, extensions excluded (a static conf
+    * that cannot apply to an already-running shared session). */
+  val settings: Seq[(String, String)] = Seq(
+    "spark.sql.session.timeZone" -> "UTC",
+    Tables.NanosAsLongKey -> "true",
+    "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "1000000",
+    "spark.sql.codegen.cache.maxEntries" -> CodegenCacheEntries.toString,
+    // Off: with isolation on, each session UUID gets its own executor
+    // classloader, and every Structured Streaming run executes on a
+    // cloned session with a new UUID. The codegen cache key carries the
+    // classloader, so every twin run recompiled the classes its tasks
+    // run (measured at sf0.01: streaming_quota 13 of its 26 per run,
+    // streaming_resample 20 of 29; 0 and 3 with isolation off), and
+    // the dead entries pushed live ones out. The engine adds no jars,
+    // files or artifacts to any session, so isolation protects nothing.
+    "spark.sql.artifact.isolation.enabled" -> "false",
+    // The local file system without shell commands (graft.LocalFs):
+    // with no native Hadoop library the stock one forked chmod and
+    // readlink 170 times per streaming_quota run and 280 per
+    // streaming_resample run, inside the state-store commits and the
+    // offset and commit log writes.
+    "spark.hadoop.fs.file.impl" -> classOf[NioLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" ->
+      classOf[NioLocalFs].getName,
+    // NEGATIVE RESULT (round-15, recorded per guide §1): flipping AQE to
+    // parallelismFirst=false (coalesce toward an advisory partition
+    // size instead of the 1 MB minPartitionSize chunks) was measured as
+    // a heavy LOSS at fixture scale on 32 cores — back-to-back 20-query
+    // slice 31.8 → 48.8 s wall at advisory 16m (35.9 s at 4m): the
+    // advisory-size targets collapse the 5–20 MB CPU-heavy reduces
+    // (degree_dist's pair distinct, frequent_pairs' pair aggregate) to
+    // 1–2 tasks that serialize seconds of aggregation work while the
+    // other cores idle (task CPU DOWN 155 → 128 s, task wall UP 273 →
+    // 391 s — the waiting-not-working signature). Stock AQE coalescing
+    // already data-derives tiny-exchange widths (sub-1MB exchanges
+    // collapse to one task at any core count), so the defaults stand.
+  )
+
   /** Pre-configured builder — callers may still override any setting or
     * add their own before `getOrCreate()`. */
   def builder(master: String = "local[*]",
@@ -41,33 +80,7 @@ object GraftSession {
     val b = SparkSession.builder()
       .master(master)
       .config("spark.sql.extensions", classOf[GraftExtensions].getName)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(Tables.NanosAsLongKey, "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-              "1000000")
-      .config("spark.sql.codegen.cache.maxEntries",
-              CodegenCacheEntries.toString)
-      // Off: with isolation on, each session UUID gets its own executor
-      // classloader, and every Structured Streaming run executes on a
-      // cloned session with a new UUID. The codegen cache key carries the
-      // classloader, so every twin run recompiled the classes its tasks
-      // run (measured at sf0.01: streaming_quota 13 of its 26 per run,
-      // streaming_resample 20 of 29; 0 and 3 with isolation off), and
-      // the dead entries pushed live ones out. The engine adds no jars,
-      // files or artifacts to any session, so isolation protects nothing.
-      .config("spark.sql.artifact.isolation.enabled", "false")
-      // NEGATIVE RESULT (round-15, recorded per guide §1): flipping AQE to
-      // parallelismFirst=false (coalesce toward an advisory partition
-      // size instead of the 1 MB minPartitionSize chunks) was measured as
-      // a heavy LOSS at fixture scale on 32 cores — back-to-back 20-query
-      // slice 31.8 → 48.8 s wall at advisory 16m (35.9 s at 4m): the
-      // advisory-size targets collapse the 5–20 MB CPU-heavy reduces
-      // (degree_dist's pair distinct, frequent_pairs' pair aggregate) to
-      // 1–2 tasks that serialize seconds of aggregation work while the
-      // other cores idle (task CPU DOWN 155 → 128 s, task wall UP 273 →
-      // 391 s — the waiting-not-working signature). Stock AQE coalescing
-      // already data-derives tiny-exchange widths (sub-1MB exchanges
-      // collapse to one task at any core count), so the defaults stand.
+      .config(settings.toMap)
     shufflePartitions.fold(b)(n =>
       b.config("spark.sql.shuffle.partitions", n.toString))
   }

@@ -346,12 +346,10 @@ object Curation {
       lmScoreCompute(spark, dir)
     }.orderBy(col("doc_id"))
 
-  /** Spec window into the staging lineage (PlanSpec asserts its shape —
-    * unigram broadcast, no gram window — which the staged read hides). */
-  private[graft] def lmScoreComputeForSpec(spark: SparkSession,
-      dir: String): DataFrame = lmScoreCompute(spark, dir)
-
-  private def lmScoreCompute(spark: SparkSession, dir: String): DataFrame = {
+  /** The staged layer's lineage. PlanSpec asserts its shape (unigram
+    * broadcast, no gram window), which the staged read hides. */
+  private[graft] def lmScoreCompute(spark: SparkSession,
+      dir: String): DataFrame = {
     val toks = Tables.spread(Tables.t(spark, dir, "documents"))
       .filter(col("text").isNotNull)
       .select(col("doc_id"), Text.tokens(col("text")).as("toks"))

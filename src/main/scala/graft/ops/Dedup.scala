@@ -21,11 +21,12 @@ import graft.Tables
 object Dedup {
 
   /** Composable 3-shingle formulation over a MATERIALIZED token-array
-    * column — kept as the executable spec of the native
-    * graft.functions.Shingles expression (set equivalence asserted in
-    * DedupSpec). array_distinct matches the native expression's
-    * distinct-set output — without it, a repeated 3-gram would change
-    * size(sh) and every Jaccard denominator downstream. `toks` must be a
+    * column — no query calls it: it stays in main as the executable
+    * reference of the native graft.functions.Shingles expression (set
+    * equivalence asserted in DedupSpec). array_distinct matches the
+    * native expression's distinct-set output — without it, a repeated
+    * 3-gram would change size(sh) and every Jaccard denominator
+    * downstream. `toks` must be a
     * bound attribute: higher-order lambdas get no subexpression
     * elimination, so an inline split() would re-run the regex per
     * emitted shingle. */

@@ -762,10 +762,11 @@ object Relational {
   def q21Waiting(spark: SparkSession, dir: String): DataFrame =
     Tables.sql(spark, dir, q21WaitingSql)
 
-  /** The one-aggregate rewrite of q21Waiting's qualification rule, used
-    * by ExtendedOpsSpec to prove the decorrelated SQL form computes the
-    * textbook semantics: per order, count distinct suppliers and
-    * distinct LATE suppliers in ONE orderkey-shuffled aggregate; a late
+  /** The one-aggregate rewrite of q21Waiting's qualification rule. No
+    * query calls it: it stays in main as the executable reference
+    * ExtendedOpsSpec holds the decorrelated SQL form to, proving it
+    * computes the textbook semantics: per order, count distinct
+    * suppliers and distinct LATE suppliers in ONE orderkey-shuffled aggregate; a late
     * line qualifies ⇔ its order has ≥ 2 suppliers and exactly 1 late
     * one (necessarily the line's own). No self-join at all — the shape
     * to hand-write at scale if planner decorrelation ever regressed. */

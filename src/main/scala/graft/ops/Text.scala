@@ -406,13 +406,11 @@ object Text {
     (graft.Staged.value(mergesKey)(learn()._1), vocab)
   }
 
-  /** Corpus-parameterized body of bpeMerges — the planted-corpus entry
-    * the spec drives directly. */
   /** The shared learning loop: runs BpeRounds merge rounds and returns
     * (learned merge rows, final vocab). The final vocab is handed back
-    * STILL PERSISTED — bpeMerges drops it immediately, bpeEncode joins
-    * the corpus against it (the caller owns the unpersist). */
-  private def bpeLearn(spark: SparkSession, docs: DataFrame)
+    * STILL PERSISTED — bpeModel stages it, and TextSimilaritySpec drives
+    * the loop on planted corpora (the caller owns the unpersist). */
+  private[graft] def bpeLearn(spark: SparkSession, docs: DataFrame)
       : (Seq[(Long, String, String, Long, Long)], DataFrame) = {
     // NEGATIVE RESULT (round-15, recorded per guide §1): folding each
     // round's two actions (argmax collect + mass aggregate) into ONE
@@ -449,16 +447,6 @@ object Text {
       }
     }
     (learned.toSeq, vocab)
-  }
-
-  private[graft] def bpeMergesOf(spark: SparkSession,
-      docs: DataFrame): DataFrame = {
-    import spark.implicits._
-    val (learned, vocab) = bpeLearn(spark, docs)
-    vocab.unpersist()
-    learned
-      .toDF("merge_round", "lhs", "rhs", "pair_count", "symbols_after")
-      .orderBy(col("merge_round"))
   }
 
   /** BPE encoding of the corpus under the learned merges — the ENCODE

@@ -102,32 +102,6 @@ object EventStream {
       .select(col("w")("start").as("window_start"), col("event_type"),
               col("n_events"), col("sum_value"))
 
-  /** Arbitrary-state streaming: a running per-user (count, sum) maintained
-    * in explicit GroupState via flatMapGroupsWithState — the escape hatch
-    * for stateful logic no built-in aggregation expresses (the reference
-    * has none, but a training-data pipeline's per-entity quota/dedup
-    * counters live here). State is partitioned by user_id, so it scales
-    * with the key space across executors; each micro-batch touches only
-    * the keys present in the batch. */
-  def runningUserStats(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val typed = readEvents(spark, dir)
-      .selectExpr("user_id", "value").as[(Long, Double)]
-    typed.groupByKey(_._1)
-      .flatMapGroupsWithState[(Long, Double), (Long, Long, Double)](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[(Long, Double)],
-         state: GroupState[(Long, Double)]) =>
-          val (n0, s0) = state.getOption.getOrElse((0L, 0.0))
-          var n = n0; var s = s0
-          rows.foreach { r => n += 1; s += r._2 }
-          state.update((n, s))
-          Iterator((uid, n, s))
-      }
-      .toDF("user_id", "n_events", "sum_value")
-  }
-
   /** Coarse event-time BAND for compositing into a stream-stream join's
     * equi-key (the batch range-join bucketing recipe applied to join
     * STATE): with band width = the join's interval length, a right-side

@@ -62,11 +62,13 @@ object StreamingBatch {
 
   /** Stateful shuffle width sized to the SOURCE, not a constant: every
     * stateful operator opens one state store per shuffle partition per
-    * micro-batch, and store open/commit is a fixed cost that dominates
+    * micro-batch, and store open/commit was a fixed cost that dominated
     * at fixture scale — hence the floor of 4 (the round-6 cost-curve
-    * measurement). But a single-file probe source delivers the WHOLE
-    * table as one micro-batch, where a 4-wide stateful interval join is
-    * a 4-core quadratic — the round-12 density probe (10M events,
+    * measurement, taken while the local file system still forked
+    * `chmod` and `readlink` inside every store commit; see
+    * [[graft.NioRawLocalFileSystem]]). But a single-file probe source
+    * delivers the WHOLE table as one micro-batch, where a 4-wide
+    * stateful interval join is a 4-core quadratic — the round-12 density probe (10M events,
     * 6,667/user) measured exactly that wall. ~250k source rows per
     * partition keeps per-store state in the regime the local
     * cost curve was measured in; capped at the session's parallelism.
@@ -156,11 +158,13 @@ object StreamingBatch {
     * ZERO streaming state held across triggers.
     *
     * Stateful shuffle `width`: see [[statefulWidth]] — a floor of 4 at
-    * fixture scale (state-store open/commit is the fixed cost that
-    * dominates a bounded local run: measured at sf0.1, the funnel join
-    * reads 14.9s at 32 partitions, 7.0s at 8, 4.6s at 4, 4.4s at 2,
-    * min-of-3 solo), growing with the source so a probe-scale batch is
-    * not a 4-core stateful join.
+    * fixture scale (state-store open/commit was the fixed cost that
+    * dominated a bounded local run: measured at sf0.1, the funnel join
+    * read 14.9s at 32 partitions, 7.0s at 8, 4.6s at 4, 4.4s at 2,
+    * min-of-3 solo — figures taken before the file system stopped
+    * forking shell commands per store commit, so they overstate the
+    * per-partition cost today), growing with the source so a
+    * probe-scale batch is not a 4-core stateful join.
     *
     * `noDataBatch=false` skips the trailing watermark-closure micro-batch
     * for APPEND twins whose emission is ARRIVAL-driven (inner

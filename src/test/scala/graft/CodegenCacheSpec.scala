@@ -5,10 +5,10 @@ import org.apache.spark.metrics.source.CodegenMetrics
 import graft.streaming.StreamingBatch
 
 /** Spark's generated-code cache stays warm across repeated queries: a
-  * second run of the same query compiles nothing. Two settings in
-  * GraftSession (mirrored by TestSpark) make that hold — a cache sized
-  * above the suite's working set, and artifact isolation off so each
-  * streaming run's cloned session does not key the cache by a new
+  * second run of the same query compiles nothing. Two of
+  * GraftSession.settings (which TestSpark applies too) make that hold — a
+  * cache sized above the suite's working set, and artifact isolation off
+  * so each streaming run's cloned session does not key the cache by a new
   * classloader. */
 class CodegenCacheSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark

@@ -123,7 +123,7 @@ class PlanSpec extends AnyFunSuite {
       "the staged read must not re-derive the bigram explode")
     // the staging compute keeps the documented shape: unigram stats
     // broadcast, no gram-partitioned window
-    val pc = plan(Curation.lmScoreComputeForSpec(spark, sf))
+    val pc = plan(Curation.lmScoreCompute(spark, sf))
     val broadcasts = "BroadcastHashJoin".r.findAllIn(pc).length
     assert(broadcasts >= 1,
       s"unigram stats should broadcast in the staging lineage, got " +

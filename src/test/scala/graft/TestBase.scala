@@ -3,22 +3,15 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Path}
 
-/** One shared local SparkSession for all suites. */
+/** One shared local SparkSession for all suites, with the engine's
+  * settings ([[GraftSession.settings]]) minus its extensions: the shared
+  * session registers functions explicitly where a spec needs them. */
 object TestSpark {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
+      .config(GraftSession.settings.toMap)
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(Tables.NanosAsLongKey, "true")
-      // mirrors GraftSession: the aggregate threshold, the generated-code
-      // cache size and artifact isolation off (extensions omitted: the
-      // shared test session registers functions explicitly where needed)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-              "1000000")
-      .config("spark.sql.codegen.cache.maxEntries",
-              GraftSession.CodegenCacheEntries.toString)
-      .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")

@@ -596,6 +596,14 @@ class TextSimilaritySpec extends AnyFunSuite {
     }
   }
 
+  /** The merge rows Text.bpeLearn learns from a planted corpus. */
+  private def bpeMergesOf(docs: org.apache.spark.sql.DataFrame)
+      : Seq[(Long, String, String, Long, Long)] = {
+    val (learned, vocab) = Text.bpeLearn(spark, docs)
+    vocab.unpersist()
+    learned
+  }
+
   test("bpe_merges: hand-computed merge sequence on a planted corpus — " +
        "greedy overlap on aaa, composite merges, lexicographic " +
        "tie-break, count-weighted selection") {
@@ -606,10 +614,7 @@ class TextSimilaritySpec extends AnyFunSuite {
     // r4..r6 are all count-1 — selection falls to the (lhs, rhs)
     //    lexicographic tie-break: (c,aaa), then (x,y), then (x,z)
     val docs = Seq((1L, "aaab aaab caaa xy xz")).toDF("doc_id", "text")
-    val got = Text.bpeMergesOf(spark, docs).collect().map(r =>
-      (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3),
-       r.getLong(4)))
-    assert(got.toSeq === Seq(
+    assert(bpeMergesOf(docs) === Seq(
       (1L, "a", "a", 6L, 13L),
       (2L, "aa", "a", 3L, 10L),
       (3L, "aaa", "b", 2L, 8L),
@@ -641,7 +646,7 @@ class TextSimilaritySpec extends AnyFunSuite {
        "emitting degenerate rounds") {
     // single-letter words only — no adjacent pairs exist at all
     val docs = Seq((1L, "a b c a b")).toDF("doc_id", "text")
-    assert(Text.bpeMergesOf(spark, docs).collect().isEmpty)
+    assert(bpeMergesOf(docs).isEmpty)
   }
 
   // ---- shared plain-Scala recompute helpers (PQ / MMR) ---------------
